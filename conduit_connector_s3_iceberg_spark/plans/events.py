@@ -2000,8 +2000,12 @@ def q78_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spark.sql.shuffle.partitions (r13 verdict #6): the self-join pays a
     # band exchange of exactly this width anyway, so pre-spreading to the
     # configured value replaces that exchange instead of pinning the frame
-    # to the local core count at cluster scale.
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # to the local core count at cluster scale. Some runtimes set the conf
+    # to a non-integer (Databricks' "auto"); fall back to the core count.
+    try:
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        n_shuffle = spark.sparkContext.defaultParallelism
     banded = sessions.select(
         "user_id",
         "session_id",

@@ -24,8 +24,19 @@ Wire protocol (client → server, one JSON object per line):
 * ``{"rpc": "run"}`` — opens the record stream; afterwards each
   ``{"record": {...}}`` line is one ``Run.Request`` and each response
   line is an ack ``{"ok": true, "ack_position": "..."}`` or a terminal
-  ``{"error": {...}}``; ``{"end": true}`` half-closes the stream.
+  ``{"error": {...}}``; ``{"end": true}`` half-closes the stream (no
+  reply).
 * ``{"rpc": "stop"}`` / ``{"rpc": "teardown"}``
+
+Group commit: every complete record frame in one socket read goes to the
+stream as one group (see :class:`~.service.DestinationStream`): its
+inserts share commits, and each update or delete commits once, together
+with the inserts after it. Nothing waits for more frames to arrive — a
+lone frame is a group of one — so a client that pipelines records ahead
+of acks gets larger groups as the server falls behind. Acks follow the
+commit: a record's ack is written as soon as the commit holding it has
+landed, and acks keep the frames' order. A failed record gets one error;
+the stream is then closed and the rest of its group is dropped.
 
 Server → client unary responses: ``{"ok": true, ...fields}`` or
 ``{"error": {"code": "INTERNAL", "description": "..."}}``.
@@ -173,6 +184,7 @@ class _Handler(socketserver.StreamRequestHandler):
                 if not chunk:
                     return
                 buf += chunk
+                group: list[RunRequest] = []  # this read's record frames
                 while b"\n" in buf:
                     raw, buf = buf.split(b"\n", 1)
                     line = raw.strip()
@@ -181,16 +193,41 @@ class _Handler(socketserver.StreamRequestHandler):
                     try:
                         msg = json.loads(line)
                     except json.JSONDecodeError as e:
+                        run_stream = self._flush(run_stream, group)
                         self._reply(
                             {"error": {"code": "INTERNAL",
                                        "description": str(e)}}
                         )
                         continue
+                    in_run = run_stream is not None and not msg.get("end")
+                    if in_run and "record" in msg:
+                        try:
+                            group.append(
+                                RunRequest(record=record_from_wire(msg["record"]))
+                            )
+                        except Exception as e:
+                            run_stream = self._flush(run_stream, group)
+                            if run_stream is not None:
+                                run_stream.on_error(e)
+                            run_stream = None
+                        continue
+                    run_stream = self._flush(run_stream, group)
                     run_stream, done = self._dispatch(msg, run_stream, server)
                     if done:
                         return
+                run_stream = self._flush(run_stream, group)
             finally:
                 self.server.request_done()  # type: ignore[attr-defined]
+
+    @staticmethod
+    def _flush(run_stream, group: list[RunRequest]):
+        """Apply the pending record frames as one group; returns the run
+        stream, or None once it has closed."""
+        if run_stream is None or not group:
+            return run_stream
+        run_stream.on_group(group)
+        group.clear()
+        return None if run_stream.closed else run_stream
 
     def _dispatch(  # noqa: C901 — linear RPC dispatch
         self, msg: dict[str, Any], run_stream, server: "PluginServer"
@@ -198,20 +235,11 @@ class _Handler(socketserver.StreamRequestHandler):
         """Process one frame; returns (run_stream, connection_done)."""
         dest, specifier = server.destination, server.specifier
         if run_stream is not None:
-            # inside the Run stream: record / end frames only
+            # inside the Run stream: record frames are grouped by handle();
+            # only the end frame reaches here
             if msg.get("end"):
                 run_stream.on_completed()
                 return None, False
-            if "record" in msg:
-                try:
-                    req = RunRequest(record=record_from_wire(msg["record"]))
-                except Exception as e:
-                    run_stream.on_error(e)
-                    return None, False
-                run_stream.on_next(req)
-                if run_stream.closed:
-                    run_stream = None
-                return run_stream, False
             self._reply(
                 {"error": {"code": "INTERNAL",
                            "description": "expected record or end frame"}}

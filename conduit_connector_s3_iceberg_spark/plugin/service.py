@@ -42,6 +42,7 @@ but with a diagnosable cause instead of a null pointer.
 
 from __future__ import annotations
 
+import itertools
 import threading
 from dataclasses import dataclass, field
 from typing import Any, Callable, Protocol
@@ -201,12 +202,26 @@ def record_from_wire(msg: dict[str, Any]) -> Record:
 
 
 class DestinationStream:
-    """The ``Run`` bidirectional stream: request observer that applies each
-    record and acks (or errors) on the response observer — the
+    """The ``Run`` bidirectional stream: request observer that applies
+    records and acks (or errors) on the response observer — the
     ``SparkDestinationStream`` role (``SparkDestinationStream.java:
     60-277``) with the write itself delegated to :class:`CdcWriter`
     (which already carries the decode rules, FAILFAST parse, and the
-    composite-key fix)."""
+    composite-key fix).
+
+    Group commit: :meth:`on_group` applies a group of received records
+    inside one ``writer.batch()``, where the reference commits each record
+    on its own. The group commits as runs of records bound for one table,
+    a new run starting at each update or delete (see
+    :class:`~conduit_connector_s3_iceberg_spark.writer.WriteGroup`). Ack
+    after commit: each position is acked, in order, as soon as the commit
+    holding its record has landed, before the group's later runs commit.
+    If a commit fails, nothing of it has landed; its records and the rest
+    of the group are re-applied one record at a time, the good prefix is
+    acked, and the first failing record gets the reference's single
+    ``couldn't write record: <cause>`` error (``:76-84``), which closes
+    the stream and drops every later record. :meth:`on_next` is a group
+    of one."""
 
     def __init__(self, response_observer: StreamObserver, writer: CdcWriter):
         self.response_observer = response_observer
@@ -214,17 +229,38 @@ class DestinationStream:
         self.closed = False
 
     def on_next(self, request: RunRequest) -> None:
+        self.on_group([request])
+
+    def on_group(self, requests: list[RunRequest]) -> None:
         if self.closed:
             return
+        records = [r.record for r in requests]
+        unacked = iter(records)
+
+        def ack_landed(n: int) -> None:
+            for record in itertools.islice(unacked, n):
+                self._ack(record)
+
+        group = self.writer.batch(on_landed=ack_landed)
         try:
-            record = request.record
-            self.writer.write(record)
-            self.response_observer.on_next(RunResponse(ack_position=record.position))
-        except Exception as e:  # reference :76-84 — any cause, one prefix
-            self.closed = True
-            self.response_observer.on_error(
-                ServiceError(f"couldn't write record: {e}")
-            )
+            with group:
+                for record in records:
+                    self.writer.write(record)
+        except Exception:
+            pass  # nothing from the failed commit on landed; retried below
+        for record in records[group.landed :]:
+            try:
+                self.writer.write(record)
+            except Exception as e:  # reference :76-84 — any cause, one prefix
+                self.closed = True
+                self.response_observer.on_error(
+                    ServiceError(f"couldn't write record: {e}")
+                )
+                return
+            self._ack(record)
+
+    def _ack(self, record: Record) -> None:
+        self.response_observer.on_next(RunResponse(ack_position=record.position))
 
     def on_error(self, error: Exception) -> None:
         # reference :264-270: reflect the client-side stream failure back

@@ -1,4 +1,4 @@
-"""The CDC write path: insert / delete / update / batched MERGE apply.
+"""The CDC write path: insert / delete / update / grouped and batched apply.
 
 Re-expresses the reference's data plane (``SparkDestinationStream.java:
 94-235``) Spark-first:
@@ -9,12 +9,26 @@ Re-expresses the reference's data plane (``SparkDestinationStream.java:
   ANDed (fixing the reference's composite-key bug at ``:126-132``); values
   are bound as typed literals, not string-spliced (the reference inlines
   escaped literals via jOOQ, ``:134`` — same injection safety, cleaner).
-* **update** — atomic MERGE (upsert), fixing the reference's non-atomic
-  delete-then-insert (``:110-114``, data-loss risk documented in its
-  ``README.md:74-77``).
+* **update** — atomic replace-by-key in one commit, fixing the reference's
+  non-atomic delete-then-insert (``:110-114``, data-loss risk documented in
+  its ``README.md:74-77``).
+* **group commit** — ``with writer.batch(): writer.write(r) ...`` stages
+  records and commits them on exit with exactly the effect of applying
+  them one at a time (inserts append, so duplicate keys stay). Each update
+  or delete starts a new commit that also holds the inserts after it:
+  inserts share commits, while every update or delete keeps its own
+  rewrite, so the bytes written do not depend on how records were
+  grouped (see :class:`WriteGroup`). A ``write`` outside a batch is a
+  group of one. The reference commits once
+  per record (``SparkDestinationStream.java:60-277``); the plugin's Run
+  stream commits each socket read's records as one group.
 * **apply_batch** — the scale path the reference lacks: collapse a
   micro-batch last-write-wins per key, then apply with ONE merge — one
   commit per epoch instead of one Spark job + one data file per record.
+
+Every change frame built from Python values (payload rows, delete keys,
+epoch watermarks) goes through Arrow (:func:`arrow_frame`): a local relation,
+not a pickled RDD that each partition must run through a Python worker.
 
 Storage backends: with the Iceberg runtime present, tables resolve through
 the configured catalog and DML is real Iceberg row-level MERGE/DELETE.
@@ -29,13 +43,29 @@ import json
 import os
 import shutil
 import uuid
+from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .records import Operation, Record, key_to_map, normalize_payload_json
+from .records import (
+    Operation,
+    Record,
+    key_to_map,
+    normalize_payload_json,
+    struct_key_to_map,
+)
+
+
+def arrow_frame(spark: SparkSession, columns: dict[str, Any]) -> DataFrame:
+    """A small frame built from Python values through Arrow: ``columns`` maps
+    each column name to a list or ``pyarrow.Array``. The frame plans as a
+    local relation, where ``createDataFrame`` on Python tuples plans a
+    pickled RDD whose every partition passes through a Python worker."""
+    return spark.createDataFrame(pa.table(columns))
 
 
 class ParquetWarehouse:
@@ -252,14 +282,23 @@ class ParquetWarehouse:
         self._commit(table, version_dir, mark=mark)
 
     def _write_data(
-        self, table: str, df: DataFrame, out_dir: str, spec: dict | None = None
+        self,
+        table: str,
+        df: DataFrame,
+        out_dir: str,
+        spec: dict | None = None,
+        finish=None,
     ) -> None:
         """Write one version's data files honoring the table spec:
         hive-layout partition dirs, and the declared write sort order —
         Iceberg's ``write.distribution-mode=range`` + ``WRITE ORDERED BY``:
         range-partition on the sort key (one shuffle), then a local
         per-task sort, so each parquet file covers a narrow, disjoint
-        sort-key range and row-group min/max stats actually skip files."""
+        sort-key range and row-group min/max stats actually skip files.
+
+        ``finish`` maps the laid-out frame to the rows written. It applies
+        above the range exchange, whose sampling job reads every row below
+        it, so an ``observe`` inside ``finish`` counts each row once."""
         if spec is None:
             spec = self._spec(table)
         if spec["sort_by"]:
@@ -267,6 +306,8 @@ class ParquetWarehouse:
             df = df.repartitionByRange(n, *spec["sort_by"]).sortWithinPartitions(
                 *(spec["partition_by"] + spec["sort_by"])
             )
+        if finish is not None:
+            df = finish(df)
         writer = df.write.mode("overwrite")
         if spec["partition_by"]:
             writer = writer.partitionBy(*spec["partition_by"])
@@ -399,11 +440,25 @@ class ParquetWarehouse:
         carries it, the append is a NO-OP. Epoch maintainers that write
         several tables pass ``mark=f"e{epoch_id}"`` so a crash BETWEEN
         the tables' commits replays exactly-once per table: the tables
-        that committed skip, the ones that didn't apply."""
+        that committed skip, the ones that didn't apply.
+
+        Pending merge-on-read deletes apply by key to the whole table, so
+        carried forward unchanged they would also hide appended rows that
+        reuse a deleted key. Such an append (checked with one semi-join of
+        the new rows against the pending delete keys) folds the deletes in
+        and commits one copy-on-write version instead: the deleted old
+        rows stay gone and the new rows are visible, as Iceberg's sequence
+        numbers order them."""
         if mark is not None and self.mark_applied(table, mark):
             return
         current = self._current_path(table)
         self._check_layout_matches_spec(table, current)
+        if self._delete_files(current):
+            dels = self.spark.read.parquet(os.path.join(current, "_deletes"))
+            if not df.join(dels, dels.columns, "left_semi").isEmpty():
+                merged = self.read(table).unionByName(df, allowMissingColumns=True)
+                self._write_version(table, merged, mark=mark)
+                return
         version_dir = os.path.join(self._dir(table), f"v-{uuid.uuid4().hex}")
         staging = version_dir + ".stage"
         self._write_data(table, df, staging)
@@ -454,12 +509,26 @@ class ParquetWarehouse:
         return {"replaced_partitions": sorted(touched)}
 
     def overwrite_where_not(self, table: str, predicate: F.Column) -> int:
-        """DELETE FROM table WHERE predicate → CoW rewrite keeping ¬pred."""
-        cur = self.read(table)
-        deleted = cur.filter(predicate).count()
-        if deleted:
-            self._write_version(table, cur.filter(~predicate))
-        return deleted
+        """DELETE FROM table WHERE predicate → CoW rewrite keeping the rows
+        where ``predicate`` is not true (a NULL match keeps the row, as in
+        SQL DELETE). One job: the rewrite counts the deleted rows as it
+        goes, and commits only if there were any. Returns that count."""
+        hit = F.coalesce(predicate, F.lit(False))
+        deleted = Observation()
+        version_dir = os.path.join(self._dir(table), f"v-{uuid.uuid4().hex}")
+        self._write_data(
+            table,
+            self.read(table),
+            version_dir,
+            finish=lambda df: df.observe(deleted, F.count_if(hit).alias("n"))
+            .filter(~hit),
+        )
+        n = deleted.get["n"]
+        if n:
+            self._commit(table, version_dir)
+        else:
+            shutil.rmtree(version_dir, ignore_errors=True)
+        return n
 
     def overwrite_with(
         self, table: str, df: DataFrame, mark: str | None = None
@@ -721,6 +790,80 @@ class ParquetWarehouse:
         return {"files_before": before, "files_after": self.num_data_files(table)}
 
 
+@dataclass
+class _Change:
+    """One staged record: ``key`` for update/delete, ``payload`` (normalized
+    JSON) for insert/update."""
+
+    key: dict[str, Any] | None
+    payload: str | None
+
+
+@dataclass
+class _Run:
+    """Consecutive staged records that commit together: one target writer,
+    at most one update or delete and, if there is one, it comes first.
+    ``records`` counts the records it acks, UNSPECIFIED ones included."""
+
+    writer: "CdcWriter"
+    changes: list[_Change] = field(default_factory=list)
+    records: int = 0
+
+
+class WriteGroup:
+    """The records that ``write`` stages inside ``with writer.batch():``.
+
+    On a clean exit the group commits its runs in order, one atomic commit
+    each. A run is the consecutive records bound for one target table, split
+    before every update or delete, so it is one append (inserts only) or one
+    copy-on-write rewrite led by its single update or delete, with the
+    inserts that follow it. A rewrite costs O(table) bytes however many
+    removals it holds: merging them would make the bytes written for a
+    record stream depend on where group boundaries happen to fall, so each
+    update or delete keeps its own rewrite and grouping saves the inserts'
+    commits.
+
+    ``landed`` counts the records whose commit has landed, and
+    ``on_landed(n)`` is called with the ``n`` records of each run as it
+    lands. If staging or a commit raises, that commit and the runs after it
+    have not landed: the exception propagates and ``landed`` is where a
+    caller resumes."""
+
+    def __init__(self, owner: "CdcWriter | CollectionRouter", on_landed=None):
+        self.owner = owner
+        self.on_landed = on_landed
+        self.runs: list[_Run] = []
+        self.landed = 0
+
+    def __enter__(self) -> "WriteGroup":
+        if self.owner._group is not None:
+            raise RuntimeError("write groups do not nest")
+        self.owner._group = self
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        self.owner._group = None
+        if exc_type is None:
+            for run in self.runs:
+                if run.changes:
+                    run.writer._apply(run.changes)
+                self.landed += run.records
+                if self.on_landed is not None:
+                    self.on_landed(run.records)
+
+    def add(self, writer: "CdcWriter", change: _Change | None) -> None:
+        """Stage one record; ``change`` is None for UNSPECIFIED, which is
+        acked with the run that holds it."""
+        run = self.runs[-1] if self.runs else None
+        removal = change is not None and change.key is not None
+        if run is None or run.writer is not writer or removal:
+            run = _Run(writer)
+            self.runs.append(run)
+        if change is not None:
+            run.changes.append(change)
+        run.records += 1
+
+
 class CdcWriter:
     """Applies OpenCDC records to one target table (the reference's
     ``SparkDestinationStream`` role)."""
@@ -736,24 +879,26 @@ class CdcWriter:
         # CoW rewrite — the right trade for delete-heavy CDC feeds, paid
         # back by periodic rewrite_deletes() compaction
         self.mor_deletes = mor_deletes
+        self._group: WriteGroup | None = None
 
     # -- helpers ------------------------------------------------------------
-    def _payload_df(self, records: list[Record]) -> DataFrame:
-        """Schema-conformed FAILFAST parse of payload JSON against the
-        target table's schema (reference ``:216,221-227``)."""
+    def _payload_df(self, payloads: list[str]) -> DataFrame:
+        """Schema-conformed FAILFAST parse of normalized payload JSON
+        against the target table's schema (reference ``:216,221-227``).
+        One partition: a run's rows land as one data file."""
         schema = self.wh.schema(self.table)
-        lines = [normalize_payload_json(r.payload_after) for r in records]
-        ds = self.spark.createDataFrame([(s,) for s in lines], "value string")
-        return ds.select(
+        parsed = arrow_frame(self.spark, {"value": payloads}).coalesce(1).select(
             F.from_json("value", schema, {"mode": "FAILFAST"}).alias("row")
-        ).select("row.*")
+        )
+        return parsed.select("row.*")
 
-    def _key_predicate(self, key_map: dict[str, Any]) -> F.Column:
+    @staticmethod
+    def _key_predicate(key_map: dict[str, Any], schema: T.StructType) -> F.Column:
         """Conjunction over ALL key fields (bug-fix vs reference ``:126-132``).
         String values compare against typed columns via Catalyst's implicit
         casts — preserving the reference's stringified-struct-key behavior
-        (``SparkDestinationStreamIT.java:167-183``)."""
-        schema = self.wh.schema(self.table)
+        (``SparkDestinationStreamIT.java:167-183``). A NULL key column is
+        no match."""
         pred = F.lit(True)
         for name, value in key_map.items():
             col_type = next(
@@ -765,9 +910,26 @@ class CdcWriter:
                 # type (Catalyst-equivalent of '12' = int_col)
                 lit = lit.cast(col_type)
             pred = pred & (F.col(name) == lit)
-        return pred
+        return F.coalesce(pred, F.lit(False))
+
+    def _key_frame(self, key: dict[str, Any], schema: T.StructType) -> DataFrame:
+        """A delete key as one row typed like the table's key columns: each
+        value in its stringified-struct form, cast to the column type."""
+        strs = struct_key_to_map(key)
+        types = {f.name: f.dataType for f in schema.fields}
+        frame = arrow_frame(
+            self.spark, {n: pa.array([v], pa.string()) for n, v in strs.items()}
+        )
+        return frame.select(
+            *[F.col(n).cast(types[n]) if n in types else F.col(n) for n in strs]
+        )
 
     # -- per-record operations (reference dispatch, ``:94-108``) ------------
+    def batch(self, on_landed=None) -> WriteGroup:
+        """Stage the ``write`` calls made inside ``with writer.batch():``
+        and commit them on exit (see :class:`WriteGroup`)."""
+        return WriteGroup(self, on_landed)
+
     def write(self, record: Record) -> None:
         op = record.operation
         if op in (Operation.CREATE, Operation.SNAPSHOT):
@@ -777,42 +939,56 @@ class CdcWriter:
         elif op == Operation.DELETE:
             self.delete(record)
         elif op == Operation.UNSPECIFIED:
-            return  # silent no-op, reference ``:105-106``
+            self._submit(None)  # silent no-op, reference ``:105-106``
         else:  # pragma: no cover
             raise ValueError(f"invalid operation {op!r}")
 
-    def insert(self, record: Record) -> None:
-        self.wh.append(self.table, self._payload_df([record]))
+    def _submit(self, change: _Change | None) -> int | None:
+        """Stage ``change`` in the open group, or commit it as a group of one."""
+        if self._group is not None:
+            self._group.add(self, change)
+            return None
+        return self._apply([change]) if change is not None else None
 
-    def delete(self, record: Record) -> int:
+    def insert(self, record: Record) -> None:
+        self._submit(_Change(None, normalize_payload_json(record.payload_after)))
+
+    def delete(self, record: Record) -> int | None:
         """CoW mode returns rows deleted; MoR mode returns key rows written
         (equality deletes are declarative — neither Iceberg nor this
-        analogue scans to count matches at commit time)."""
-        key_map = key_to_map(record.key)
-        if self.mor_deletes:
-            schema = self.wh.schema(self.table)
-            types = {f.name: f.dataType for f in schema.fields}
-            keys = self.spark.range(1).select(
-                *[
-                    (
-                        F.lit(v).cast(types[k])
-                        if isinstance(v, str) and k in types
-                        else F.lit(v)
-                    ).alias(k)
-                    for k, v in key_map.items()
-                ]
-            )
-            self.wh.delete_keys_mor(self.table, keys, list(key_map))
-            return 1
-        return self.wh.overwrite_where_not(self.table, self._key_predicate(key_map))
+        analogue scans to count matches at commit time). Inside a batch the
+        commit is deferred and this returns None."""
+        return self._submit(_Change(key_to_map(record.key), None))
 
     def update(self, record: Record) -> None:
         """Atomic replace-by-key (MERGE), not delete-then-insert."""
         key_map = key_to_map(record.key)
-        new_rows = self._payload_df([record])
-        current = self.wh.read(self.table)
-        merged = current.filter(~self._key_predicate(key_map)).unionByName(new_rows)
-        self.wh.overwrite_with(self.table, merged)
+        self._submit(_Change(key_map, normalize_payload_json(record.payload_after)))
+
+    def _apply(self, changes: list[_Change]) -> int | None:
+        """Commit one run (see :class:`WriteGroup`) as one atomic commit.
+        Inserts alone append. A run led by an update or delete replaces the
+        rows its key matches with the run's payload rows in one
+        copy-on-write rewrite; a lone delete goes through
+        ``overwrite_where_not``, or writes one equality-delete file with
+        ``mor_deletes``."""
+        head = changes[0]
+        payloads = [c.payload for c in changes if c.payload is not None]
+        if head.key is None:
+            self.wh.append(self.table, self._payload_df(payloads))
+            return None
+        schema = self.wh.schema(self.table)
+        hit = self._key_predicate(head.key, schema)
+        if not payloads:
+            if self.mor_deletes:
+                self.wh.delete_keys_mor(
+                    self.table, self._key_frame(head.key, schema), list(head.key)
+                )
+                return 1
+            return self.wh.overwrite_where_not(self.table, hit)
+        kept = self.wh.read(self.table).filter(~hit)
+        self.wh.overwrite_with(self.table, kept.unionByName(self._payload_df(payloads)))
+        return None
 
     # -- the scale path: batched apply -------------------------------------
     def apply_batch(self, records: list[Record], key_fields: list[str]) -> None:
@@ -839,9 +1015,7 @@ class CdcWriter:
             else:
                 km = key_to_map(r.key) if r.key else None
                 if km is None:
-                    import json as _json
-
-                    payload = _json.loads(normalize_payload_json(r.payload_after))
+                    payload = json.loads(normalize_payload_json(r.payload_after))
                     km = {k: payload.get(k) for k in key_fields}
                 final_op[tuple(str(km.get(k)) for k in key_fields)] = ("upsert", r)
 
@@ -852,13 +1026,17 @@ class CdcWriter:
         schema = self.wh.schema(self.table)
         result = self.wh.read(self.table)
         if upserts:
-            latest = self._payload_df(upserts)
+            latest = self._payload_df(
+                [normalize_payload_json(r.payload_after) for r in upserts]
+            )
             keys_df = latest.select(*key_fields).distinct()
             result = result.join(keys_df, key_fields, "left_anti").unionByName(latest)
         if delete_keys:
             # one anti-join against all delete keys (not N sequential filters)
-            del_df = self.spark.createDataFrame(
-                [tuple(k) for k in delete_keys], ", ".join(f"{k} string" for k in key_fields)
+            del_df = arrow_frame(
+                self.spark,
+                {k: pa.array([key[i] for key in delete_keys], pa.string())
+                 for i, k in enumerate(key_fields)},
             )
             for f_ in schema.fields:
                 if f_.name in key_fields:
@@ -899,7 +1077,7 @@ def mark_epoch_applied(
     watermark is simply the last mark-carrying write to land. (Iceberg
     folds data + watermark into one MERGE transaction; the marks protocol
     is the CoW analogue.)"""
-    row = spark.createDataFrame([(int(epoch_id),)], "epoch_id long")
+    row = arrow_frame(spark, {"epoch_id": pa.array([int(epoch_id)], pa.int64())})
     if not wh.table_exists(state_table):
         wh.create_table(state_table, row.schema)
         wh.append(state_table, row)
@@ -1040,14 +1218,18 @@ class CollectionRouter:
     ``writer_factory`` and one Run stream fans out to many tables, each
     applied through the same per-record semantics as ``CdcWriter``.
 
-    Scale note: routing is a dict lookup per record on the already
-    record-at-a-time wire path — the batched/streaming pipeline routes
+    Scale note: routing is a dict lookup per record on the wire path —
+    the batched/streaming pipeline routes
     the same key columnar-side by partitioning the epoch's frame on the
     collection column instead.
 
     Unknown collections raise (table existence is the warehouse's
     contract — auto-create hides typos and schema drift); records
     without the metadata key fall back to ``default_table``.
+
+    ``batch()`` groups records across tables: a group splits into one
+    commit per run of consecutive records bound for the same table, and
+    before every update or delete (see :class:`WriteGroup`).
     """
 
     def __init__(
@@ -1060,6 +1242,7 @@ class CollectionRouter:
         self.default_table = default_table
         self.mor_deletes = mor_deletes
         self._writers: dict[str, CdcWriter] = {}
+        self._group: WriteGroup | None = None
 
     def writer_for(self, record: Record) -> CdcWriter:
         table = (record.metadata or {}).get(
@@ -1076,5 +1259,10 @@ class CollectionRouter:
             self._writers[table] = w
         return w
 
+    def batch(self, on_landed=None) -> WriteGroup:
+        return WriteGroup(self, on_landed)
+
     def write(self, record: Record) -> None:
-        self.writer_for(record).write(record)
+        writer = self.writer_for(record)
+        writer._group = self._group  # stage into the router's open group
+        writer.write(record)

@@ -477,6 +477,115 @@ def test_collection_router_fans_out_one_stream(spark, tmp_path):
     assert "unknown collection" in str(err)
 
 
+def _wire_record(position, op, key=None, after=None):
+    """A proto-JSON record frame (base64 position and rawData)."""
+    import base64 as _b64
+
+    def b64(s: str) -> str:
+        return _b64.b64encode(s.encode()).decode()
+
+    rec = {"position": b64(position), "operation": f"OPERATION_{op}"}
+    if key is not None:
+        rec["key"] = {"rawData": b64(key)}
+    if after is not None:
+        rec["payload"] = {"after": {"rawData": b64(after)}}
+    return {"record": rec}
+
+
+def _open_run(svc):
+    server = PluginServer(port=0, destination=svc)
+    server.start()
+    c = Client(server.port)
+    assert c.call({"rpc": "configure", "config": VALID_CONFIG})["ok"]
+    assert c.call({"rpc": "start"})["ok"]
+    assert c.call({"rpc": "run"}) == {"ok": True, "stream": "open"}
+    return server, c
+
+
+def _send_all(c, frames):
+    """Every frame in one sendall, so the server reads them as one group."""
+    c.sock.sendall(b"".join((json.dumps(f) + "\n").encode() for f in frames))
+
+
+def _ack_position(reply):
+    import base64 as _b64
+
+    return _b64.b64decode(reply["response"]["ackPosition"]).decode()
+
+
+def _row(name, n):
+    return json.dumps({"string_field": name, "integer_field": n, "float_field": 0.5})
+
+
+def test_server_group_commits_one_read_and_acks_in_order(service):
+    """N record frames in one read: N ordered acks. The inserts share one
+    commit, and each update or delete commits once with the inserts after
+    it."""
+    svc, wh = service
+    server, c = _open_run(svc)
+    try:
+        commits = len(wh.history("plugin_t"))
+        frames = [
+            _wire_record("g-1", "CREATE", after=_row("a", 1)),
+            _wire_record("g-2", "CREATE", after=_row("b", 2)),
+            _wire_record("g-3", "UPDATE", key='{"integer_field": 1}',
+                         after=_row("a2", 1)),
+            _wire_record("g-4", "DELETE", key='{"integer_field": 2}'),
+            _wire_record("g-5", "CREATE", after=_row("c", 3)),
+        ]
+        _send_all(c, frames)
+        assert [_ack_position(c.recv()) for _ in frames] == [
+            "g-1", "g-2", "g-3", "g-4", "g-5"
+        ]
+        # [g-1, g-2] append, [g-3] and [g-4, g-5] rewrite
+        assert len(wh.history("plugin_t")) == commits + 3
+        got = sorted((r.string_field, r.integer_field)
+                     for r in wh.read("plugin_t").collect())
+        assert got == [("a2", 1), ("c", 3)]
+        c.close()
+    finally:
+        server.stop()
+
+
+def test_server_group_failfast_acks_prefix_and_drops_rest(service):
+    """A record that fails FAILFAST mid-group: the records before it are
+    acked, one error is sent, the records after it are dropped, and the
+    table holds exactly the prefix."""
+    svc, wh = service
+    server, c = _open_run(svc)
+    try:
+        bad = json.dumps({"string_field": "bad", "integer_field": "nope"})
+        _send_all(c, [
+            _wire_record("f-1", "CREATE", after=_row("a", 1)),
+            _wire_record("f-2", "CREATE", after=_row("b", 2)),
+            _wire_record("f-3", "CREATE", after=bad),
+            _wire_record("f-4", "CREATE", after=_row("late", 4)),
+        ])
+        assert [_ack_position(c.recv()) for _ in range(2)] == ["f-1", "f-2"]
+        err = c.recv()["error"]
+        assert err["description"].startswith("couldn't write record: ")
+        # nothing else was sent: the next line answers the stop call
+        assert c.call({"rpc": "stop"}) == {"ok": True, "response": {}}
+        got = sorted(r.string_field for r in wh.read("plugin_t").collect())
+        assert got == ["a", "b"]
+        c.close()
+    finally:
+        server.stop()
+
+
+def test_server_end_frame_gets_no_reply(service):
+    """The half-close frame sent with the stop call in one read: the only
+    reply is the stop call's."""
+    svc, _ = service
+    server, c = _open_run(svc)
+    try:
+        _send_all(c, [{"end": True}, {"rpc": "stop"}])
+        assert c.recv() == {"ok": True, "response": {}}
+        c.close()
+    finally:
+        server.stop()
+
+
 def test_plugin_process_entry_point(tmp_path):
     """Launch the plugin exactly as Conduit would (`Application.main`
     parity): spawn the process, read the go-plugin handshake off stdout,
