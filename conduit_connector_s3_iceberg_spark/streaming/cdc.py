@@ -22,11 +22,13 @@ the stream itself is zero — all keyed state lives in the target table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.codec import CDC_ENVELOPE, conform_payload, key_struct
+from ..operators.cdc_batch import last_write_wins
+from ..writer import OP_COL
 
 #: Terminal operations (reference dispatch ``:94-108``): create/snapshot/
 #: update all materialize `after`; delete removes the key; unspecified is a
@@ -81,14 +83,8 @@ def collapse_lww(decoded: DataFrame, key_fields: list[str]) -> DataFrame:
         "op",
         "row",
     ).filter(F.col("op") != "unspecified")
-    w = Window.partitionBy(*[f"__key_{k}" for k in key_fields]).orderBy(
-        F.col("seq").desc()
-    )
-    return (
-        keyed.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "seq")
-    )
+    keys = [f"__key_{k}" for k in key_fields]
+    return last_write_wins(keyed, keys, ["seq"]).drop("seq")
 
 
 def apply_cdc_batch(
@@ -100,44 +96,28 @@ def apply_cdc_batch(
     """Apply one collapsed micro-batch with MERGE semantics: upserts
     replace-or-insert their key; deletes drop it.
 
-    Store dispatch: an :class:`..iceberg.IcebergTableStore` applies the
-    batch as ONE atomic ``MERGE INTO`` (real Iceberg row-level DML); a
-    :class:`..writer.ParquetWarehouse` computes the same result via
-    anti-join + union copy-on-write."""
+    The collapsed batch becomes one table-shaped source with an
+    :data:`..writer.OP_COL` marker (a delete's key columns come from its
+    envelope key) and goes to the store's ``merge_apply``: one atomic
+    ``MERGE INTO`` on Iceberg, one copy-on-write rewrite on a
+    :class:`..writer.ParquetWarehouse`."""
     final = collapse_lww(decoded_batch, key_fields)
     schema = wh.schema(table)
-    field_types = {f.name: f.dataType for f in schema.fields}
-
-    if hasattr(wh, "merge_apply"):  # Iceberg path: one atomic MERGE
-        from ..iceberg import OP_COL
-
-        source = final.select(
-            *[
-                F.coalesce(
-                    F.col(f"row.{f.name}"),
-                    F.col(f"__key_{f.name}").cast(field_types[f.name])
-                    if f.name in key_fields
-                    else F.lit(None).cast(f.dataType),
-                ).alias(f.name)
-                for f in schema.fields
-            ],
-            F.when(F.col("op").isin(*UPSERT_OPS), F.lit("upsert"))
-            .otherwise(F.lit("delete"))
-            .alias(OP_COL),
-        )
-        wh.merge_apply(table, source, key_fields)
-        return
-
-    current = wh.read(table)
-    # all touched keys leave the table once; surviving upserts re-enter
-    touched = final.select(
-        *[F.col(f"__key_{k}").cast(field_types[k]).alias(k) for k in key_fields]
+    source = final.select(
+        *[
+            F.coalesce(
+                F.col(f"row.{f.name}"),
+                F.col(f"__key_{f.name}").cast(f.dataType)
+                if f.name in key_fields
+                else F.lit(None).cast(f.dataType),
+            ).alias(f.name)
+            for f in schema.fields
+        ],
+        F.when(F.col("op").isin(*UPSERT_OPS), F.lit("upsert"))
+        .otherwise(F.lit("delete"))
+        .alias(OP_COL),
     )
-    upserts = final.filter(F.col("op").isin(*UPSERT_OPS)).select("row.*")
-    result = current.join(F.broadcast(touched), key_fields, "left_anti").unionByName(
-        upserts
-    )
-    wh.overwrite_with(table, result)
+    wh.merge_apply(table, source, key_fields)
 
 
 #: Name of the verdict column added by :func:`classify_cdc_errors`.

@@ -22,19 +22,22 @@ Re-expresses the reference's data plane (``SparkDestinationStream.java:
   group of one. The reference commits once
   per record (``SparkDestinationStream.java:60-277``); the plugin's Run
   stream commits each socket read's records as one group.
-* **apply_batch** — the scale path the reference lacks: collapse a
-  micro-batch last-write-wins per key, then apply with ONE merge — one
-  commit per epoch instead of one Spark job + one data file per record.
+* **apply_batch** — the scale path the reference lacks: decode a
+  micro-batch into the epoch path's change frame and hand it to
+  ``streaming.cdc.apply_cdc_batch`` — one last-write-wins collapse per key,
+  one merge, one commit instead of one Spark job + one data file per record.
 
 Every change frame built from Python values (payload rows, delete keys,
 epoch watermarks) goes through Arrow (:func:`arrow_frame`): a local relation,
 not a pickled RDD that each partition must run through a Python worker.
 
-Storage backends: with the Iceberg runtime present, tables resolve through
-the configured catalog and DML is real Iceberg row-level MERGE/DELETE.
-Without it (this container), :class:`ParquetWarehouse` provides the same
-semantics via copy-on-write rewrite — functionally what Iceberg CoW does,
-minus snapshot isolation (single-writer only; documented).
+Storage backends: every apply path calls one store contract,
+:class:`TableStore` — ``append`` for insert-only runs, ``replace_key`` for a
+run led by an update or delete, ``merge_apply`` for a collapsed batch.
+:class:`ParquetWarehouse` implements it with copy-on-write rewrites —
+functionally what Iceberg CoW does, minus snapshot isolation (single-writer
+only; documented). ``iceberg.IcebergTableStore`` implements it as Iceberg
+appends and row-level MERGE against a live catalog.
 """
 
 from __future__ import annotations
@@ -44,7 +47,7 @@ import os
 import shutil
 import uuid
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Protocol
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -68,11 +71,55 @@ def arrow_frame(spark: SparkSession, columns: dict[str, Any]) -> DataFrame:
     return spark.createDataFrame(pa.table(columns))
 
 
+def key_frame(
+    spark: SparkSession, key_map: dict[str, Any], schema: T.StructType
+) -> DataFrame:
+    """A key as one row typed like the table's key columns: each value in
+    its stringified-struct form, cast to the column type."""
+    strs = struct_key_to_map(key_map)
+    types = {f.name: f.dataType for f in schema.fields}
+    frame = arrow_frame(spark, {n: pa.array([v], pa.string()) for n, v in strs.items()})
+    return frame.select(*[F.col(n).cast(types.get(n, T.StringType())) for n in strs])
+
+
+#: marker column carrying each row's operation ('upsert' | 'delete') in a
+#: :meth:`TableStore.merge_apply` source
+OP_COL = "__op"
+
+
+class TableStore(Protocol):
+    """The store contract every CDC apply path calls, implemented by
+    :class:`ParquetWarehouse` and ``iceberg.IcebergTableStore``; a store
+    also carries the ``spark`` session its frames belong to."""
+
+    spark: SparkSession
+
+    def read(self, table: str) -> DataFrame: ...
+
+    def schema(self, table: str) -> T.StructType: ...
+
+    def table_exists(self, table: str) -> bool: ...
+
+    def append(self, table: str, df: DataFrame) -> None: ...
+
+    def replace_key(
+        self, table: str, key_map: dict[str, Any], rows: DataFrame | None = None
+    ) -> int | None:
+        """Remove the rows matching ALL fields of ``key_map`` and add
+        ``rows`` in one commit; a store that counts returns the removed
+        rows when ``rows`` is None."""
+
+    def merge_apply(self, table: str, source: DataFrame, key_fields: list[str]) -> None:
+        """Apply table-shaped ``source`` rows plus :data:`OP_COL`, one per
+        key (already collapsed last-write-wins): upserts replace or insert
+        their key, deletes remove it, in one commit."""
+
+
 class ParquetWarehouse:
     """A local table namespace with copy-on-write semantics.
 
-    Stand-in for the Iceberg catalog when the runtime jar is absent: same
-    operations (append / delete / overwrite-with), same observable results.
+    Stand-in for the Iceberg catalog when the runtime jar is absent: the
+    same :class:`TableStore` contract, the same observable results.
     Each mutation writes a fresh table version directory and atomically
     repoints a symlink-like 'current' marker — the same shape as Iceberg's
     snapshot pointer, minus the manifest layer.
@@ -539,6 +586,51 @@ class ParquetWarehouse:
             return
         self._write_version(table, df, mark=mark)
 
+    @staticmethod
+    def _key_predicate(key_map: dict[str, Any], schema: T.StructType) -> F.Column:
+        """Conjunction over ALL key fields (bug-fix vs reference ``:126-132``).
+        String values compare against typed columns via Catalyst's implicit
+        casts — preserving the reference's stringified-struct-key behavior
+        (``SparkDestinationStreamIT.java:167-183``). A NULL key column is
+        no match."""
+        types = {f.name: f.dataType for f in schema.fields}
+        pred = F.lit(True)
+        for name, value in key_map.items():
+            lit = F.lit(value)
+            if name in types and isinstance(value, str):
+                # stringified struct keys: cast the literal to the column
+                # type (Catalyst-equivalent of '12' = int_col)
+                lit = lit.cast(types[name])
+            pred = pred & (F.col(name) == lit)
+        return F.coalesce(pred, F.lit(False))
+
+    def replace_key(
+        self, table: str, key_map: dict[str, Any], rows: DataFrame | None = None
+    ) -> int | None:
+        """Replace the rows ``key_map`` matches with ``rows`` in one
+        copy-on-write rewrite. Without ``rows`` this is DELETE by key
+        through :meth:`overwrite_where_not`: one observed job, no commit
+        when nothing matched, and the deleted-row count is returned."""
+        hit = self._key_predicate(key_map, self.schema(table))
+        if rows is None:
+            return self.overwrite_where_not(table, hit)
+        self.overwrite_with(table, self.read(table).filter(~hit).unionByName(rows))
+
+    def merge_apply(self, table: str, source: DataFrame, key_fields: list[str]) -> None:
+        """Copy-on-write MERGE of a collapsed batch (see
+        :meth:`TableStore.merge_apply`): every source key leaves the table
+        through one broadcast anti-join, the non-delete rows re-enter, and
+        the result commits as one version.
+
+        Keys match on the source row's own key columns, as Iceberg's MERGE
+        does. An update whose after-image key differs from its envelope key
+        therefore upserts the after-image key and leaves the row under the
+        envelope key in place."""
+        touched = source.select(*key_fields)
+        upserts = source.filter(F.col(OP_COL) != "delete").drop(OP_COL)
+        kept = self.read(table).join(F.broadcast(touched), key_fields, "left_anti")
+        self.overwrite_with(table, kept.unionByName(upserts))
+
     # -- snapshots: history / time travel / rollback ------------------------
     def _check_layout_matches_spec(self, table: str, version_path: str) -> None:
         """Guard for rollbacks across a partition evolution: linking files
@@ -866,10 +958,11 @@ class WriteGroup:
 
 class CdcWriter:
     """Applies OpenCDC records to one target table (the reference's
-    ``SparkDestinationStream`` role)."""
+    ``SparkDestinationStream`` role) through the :class:`TableStore`
+    contract."""
 
     def __init__(
-        self, warehouse: ParquetWarehouse, table: str, mor_deletes: bool = False
+        self, warehouse: TableStore, table: str, mor_deletes: bool = False
     ):
         self.wh = warehouse
         self.table = table
@@ -882,47 +975,18 @@ class CdcWriter:
         self._group: WriteGroup | None = None
 
     # -- helpers ------------------------------------------------------------
-    def _payload_df(self, payloads: list[str]) -> DataFrame:
-        """Schema-conformed FAILFAST parse of normalized payload JSON
-        against the target table's schema (reference ``:216,221-227``).
-        One partition: a run's rows land as one data file."""
+    def _row(self) -> F.Column:
+        """Schema-conformed FAILFAST parse of the ``value`` column's
+        normalized payload JSON against the target table's schema
+        (reference ``:216,221-227``), as the ``row`` struct."""
         schema = self.wh.schema(self.table)
-        parsed = arrow_frame(self.spark, {"value": payloads}).coalesce(1).select(
-            F.from_json("value", schema, {"mode": "FAILFAST"}).alias("row")
-        )
-        return parsed.select("row.*")
+        return F.from_json("value", schema, {"mode": "FAILFAST"}).alias("row")
 
-    @staticmethod
-    def _key_predicate(key_map: dict[str, Any], schema: T.StructType) -> F.Column:
-        """Conjunction over ALL key fields (bug-fix vs reference ``:126-132``).
-        String values compare against typed columns via Catalyst's implicit
-        casts — preserving the reference's stringified-struct-key behavior
-        (``SparkDestinationStreamIT.java:167-183``). A NULL key column is
-        no match."""
-        pred = F.lit(True)
-        for name, value in key_map.items():
-            col_type = next(
-                (f.dataType for f in schema.fields if f.name == name), None
-            )
-            lit = F.lit(value)
-            if col_type is not None and isinstance(value, str):
-                # stringified struct keys: cast the literal to the column
-                # type (Catalyst-equivalent of '12' = int_col)
-                lit = lit.cast(col_type)
-            pred = pred & (F.col(name) == lit)
-        return F.coalesce(pred, F.lit(False))
-
-    def _key_frame(self, key: dict[str, Any], schema: T.StructType) -> DataFrame:
-        """A delete key as one row typed like the table's key columns: each
-        value in its stringified-struct form, cast to the column type."""
-        strs = struct_key_to_map(key)
-        types = {f.name: f.dataType for f in schema.fields}
-        frame = arrow_frame(
-            self.spark, {n: pa.array([v], pa.string()) for n, v in strs.items()}
-        )
-        return frame.select(
-            *[F.col(n).cast(types[n]) if n in types else F.col(n) for n in strs]
-        )
+    def _payload_df(self, payloads: list[str]) -> DataFrame:
+        """The payloads as table rows (:meth:`_row`). One partition: a run's
+        rows land as one data file."""
+        frame = arrow_frame(self.spark, {"value": payloads}).coalesce(1)
+        return frame.select(self._row()).select("row.*")
 
     # -- per-record operations (reference dispatch, ``:94-108``) ------------
     def batch(self, on_landed=None) -> WriteGroup:
@@ -954,10 +1018,10 @@ class CdcWriter:
         self._submit(_Change(None, normalize_payload_json(record.payload_after)))
 
     def delete(self, record: Record) -> int | None:
-        """CoW mode returns rows deleted; MoR mode returns key rows written
-        (equality deletes are declarative — neither Iceberg nor this
-        analogue scans to count matches at commit time). Inside a batch the
-        commit is deferred and this returns None."""
+        """A counting store (CoW mode) returns rows deleted; MoR mode returns
+        key rows written (equality deletes are declarative — neither Iceberg
+        nor this analogue scans to count matches at commit time). Inside a
+        batch the commit is deferred and this returns None."""
         return self._submit(_Change(key_to_map(record.key), None))
 
     def update(self, record: Record) -> None:
@@ -967,82 +1031,55 @@ class CdcWriter:
 
     def _apply(self, changes: list[_Change]) -> int | None:
         """Commit one run (see :class:`WriteGroup`) as one atomic commit.
-        Inserts alone append. A run led by an update or delete replaces the
-        rows its key matches with the run's payload rows in one
-        copy-on-write rewrite; a lone delete goes through
-        ``overwrite_where_not``, or writes one equality-delete file with
-        ``mor_deletes``."""
+        Inserts alone append. A run led by an update or delete is one
+        ``replace_key``: the rows its key matches give way to the run's
+        payload rows. With ``mor_deletes`` a lone delete writes one
+        equality-delete file instead."""
         head = changes[0]
         payloads = [c.payload for c in changes if c.payload is not None]
+        rows = self._payload_df(payloads) if payloads else None
         if head.key is None:
-            self.wh.append(self.table, self._payload_df(payloads))
+            self.wh.append(self.table, rows)
             return None
-        schema = self.wh.schema(self.table)
-        hit = self._key_predicate(head.key, schema)
-        if not payloads:
-            if self.mor_deletes:
-                self.wh.delete_keys_mor(
-                    self.table, self._key_frame(head.key, schema), list(head.key)
-                )
-                return 1
-            return self.wh.overwrite_where_not(self.table, hit)
-        kept = self.wh.read(self.table).filter(~hit)
-        self.wh.overwrite_with(self.table, kept.unionByName(self._payload_df(payloads)))
-        return None
+        if self.mor_deletes and rows is None:
+            keys = key_frame(self.spark, head.key, self.wh.schema(self.table))
+            self.wh.delete_keys_mor(self.table, keys, list(head.key))
+            return 1
+        return self.wh.replace_key(self.table, head.key, rows)
 
     # -- the scale path: batched apply -------------------------------------
     def apply_batch(self, records: list[Record], key_fields: list[str]) -> None:
-        """Collapse a micro-batch last-write-wins per key and apply it with
-        one MERGE-shaped set operation (insert/update/delete together).
+        """Apply a micro-batch last-write-wins per key with one merge.
 
-        At 10^6 records/epoch this is one shuffle + one commit; the
-        reference performs 10^6 Spark jobs and writes 10^6 files.
+        The records become the epoch path's decoded change frame
+        ``(position, seq, op, k, row)`` — ``seq`` is the list order, ``row``
+        the FAILFAST payload parse — and go through
+        ``streaming.cdc.apply_cdc_batch``: one collapse, one
+        ``merge_apply``, one commit. A payload that does not conform fails
+        the batch before anything commits.
         """
-        if not records:
-            return
-        # LWW collapse per key: the record list is driver-resident by
-        # construction (this is the record-level API; the DataFrame-scale
-        # collapse is operators/cdc_batch.py + streaming/cdc.py), so resolve
-        # the final operation per key in plain Python, then apply with ONE
-        # set-oriented job.
-        final_op: dict[tuple, tuple[str, Record]] = {}
-        for r in records:
-            if r.operation == Operation.UNSPECIFIED:
-                continue
-            if r.operation == Operation.DELETE:
-                km = key_to_map(r.key)
-                final_op[tuple(str(km.get(k)) for k in key_fields)] = ("delete", r)
-            else:
-                km = key_to_map(r.key) if r.key else None
-                if km is None:
-                    payload = json.loads(normalize_payload_json(r.payload_after))
-                    km = {k: payload.get(k) for k in key_fields}
-                final_op[tuple(str(km.get(k)) for k in key_fields)] = ("upsert", r)
+        from .streaming import cdc
 
-        upserts = [r for kind, r in final_op.values() if kind == "upsert"]
-        delete_keys = [
-            key for key, (kind, _) in final_op.items() if kind == "delete"
-        ]
-        schema = self.wh.schema(self.table)
-        result = self.wh.read(self.table)
-        if upserts:
-            latest = self._payload_df(
-                [normalize_payload_json(r.payload_after) for r in upserts]
-            )
-            keys_df = latest.select(*key_fields).distinct()
-            result = result.join(keys_df, key_fields, "left_anti").unionByName(latest)
-        if delete_keys:
-            # one anti-join against all delete keys (not N sequential filters)
-            del_df = arrow_frame(
-                self.spark,
-                {k: pa.array([key[i] for key in delete_keys], pa.string())
-                 for i, k in enumerate(key_fields)},
-            )
-            for f_ in schema.fields:
-                if f_.name in key_fields:
-                    del_df = del_df.withColumn(f_.name, F.col(f_.name).cast(f_.dataType))
-            result = result.join(del_df, key_fields, "left_anti")
-        self.wh.overwrite_with(self.table, result)
+        live = [r for r in records if r.operation != Operation.UNSPECIFIED]
+        if not live:
+            return
+        frame = arrow_frame(self.spark, {
+            "position": pa.array([r.position for r in live], pa.binary()),
+            "seq": pa.array(range(len(live)), pa.int64()),
+            "op": [r.operation.value for r in live],
+            "k": pa.array([
+                struct_key_to_map(key_to_map(r.key))
+                if r.key or r.operation == Operation.DELETE else {}
+                for r in live
+            ], pa.struct([(k, pa.string()) for k in key_fields])),
+            "value": [
+                None if r.operation == Operation.DELETE
+                else normalize_payload_json(r.payload_after)
+                for r in live
+            ],
+        })
+        decoded = frame.select("position", "seq", "op", "k", self._row())
+        cdc.apply_cdc_batch(self.wh, self.table, decoded, key_fields)
 
 
 # ------------------------------------------------------------ snapshot diff
@@ -1223,7 +1260,7 @@ class CollectionRouter:
     the same key columnar-side by partitioning the epoch's frame on the
     collection column instead.
 
-    Unknown collections raise (table existence is the warehouse's
+    Unknown collections raise (``table_exists`` is part of the store
     contract — auto-create hides typos and schema drift); records
     without the metadata key fall back to ``default_table``.
 
@@ -1234,7 +1271,7 @@ class CollectionRouter:
 
     def __init__(
         self,
-        warehouse: ParquetWarehouse,
+        warehouse: TableStore,
         default_table: str,
         mor_deletes: bool = False,
     ):

@@ -2,14 +2,16 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from conduit_connector_s3_iceberg_spark.iceberg import (
     compact_sql,
-    delete_sql,
     expire_snapshots_sql,
     merge_apply_sql,
     qualified,
+    replace_key_sql,
 )
 
 
@@ -18,22 +20,35 @@ def test_qualified_quoting():
     assert qualified("c", "n", "we`ird") == "`c`.`n`.`we``ird`"
 
 
-def test_delete_sql_ands_all_key_fields():
+def test_replace_key_sql_ands_all_key_fields():
     # the reference silently drops all but one key field (jOOQ condition
     # misuse, SparkDestinationStream.java:126-132); ours must AND them all
-    sql, _ = delete_sql("`c`.`n`.`t`", ["id", "region"])
-    assert sql == "DELETE FROM `c`.`n`.`t` WHERE `id` = :k0 AND `region` = :k1"
+    sql = replace_key_sql("`c`.`n`.`t`", "src", ["id", "region"], ["qty"])
+    assert "MERGE INTO `c`.`n`.`t` AS t" in sql
+    assert (
+        "ON t.`id` = s.`id` AND t.`region` = s.`region` AND s.`__op` = 'delete'"
+        in sql
+    )
+    assert "WHEN MATCHED THEN DELETE" in sql
+    assert (
+        "WHEN NOT MATCHED AND s.`__op` = 'insert' "
+        "THEN INSERT (`id`, `region`, `qty`) VALUES (s.`id`, s.`region`, s.`qty`)"
+        in sql
+    )
 
 
-def test_delete_sql_empty_key_rejected():
+def test_replace_key_sql_empty_key_rejected():
     with pytest.raises(ValueError, match="key has no fields"):
-        delete_sql("`c`.`n`.`t`", [])
+        replace_key_sql("`c`.`n`.`t`", "src", [], ["qty"])
 
 
-def test_delete_sql_is_parameterized_not_inlined():
-    sql, _ = delete_sql("`c`.`n`.`t`", ["name"])
-    # a malicious value never reaches the SQL text — only named slots do
-    assert ":k0" in sql and "'" not in sql
+def test_replace_key_sql_binds_key_values_as_source_rows():
+    # the builder takes key field NAMES only: key values reach the MERGE as
+    # rows of the source view, so a malicious value never reaches the SQL
+    # text — the only literals are the operation markers
+    sql = replace_key_sql("`c`.`n`.`t`", "src", ["name"], ["qty"])
+    assert "t.`name` = s.`name`" in sql
+    assert sorted(set(re.findall(r"'[^']*'", sql))) == ["'delete'", "'insert'"]
 
 
 def test_merge_apply_sql_shape():
