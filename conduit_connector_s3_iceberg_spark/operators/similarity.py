@@ -6275,6 +6275,10 @@ def sim_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 RECALL_QUERIES = 50  # recall audit query set: wide enough to average noise
+# base of the composite (variant, query) key variant * base + query_id;
+# query ids stay below RECALL_QUERIES, so the div/% decode is exact
+RECALL_KEY_BASE = 1000
+assert RECALL_KEY_BASE > RECALL_QUERIES
 
 
 def _recall_variant_sql(assign: str, ranked: str) -> str:
@@ -6436,8 +6440,8 @@ def sim_ann_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tag): one probe projection computes all three K×DIM distance
     # arrays, one broadcast candidate join runs over the variant-tagged
     # index union, one two-phase top-k ranks the composite
-    # (variant*1000 + query) key, and hits/sizes/scan are one grouped
-    # aggregate each. Per-variant arithmetic is untouched — the same
+    # (variant*RECALL_KEY_BASE + query) key, and hits/sizes/scan are one
+    # grouped aggregate each. Per-variant arithmetic is untouched — the same
     # per-variant literal centroid distances, the same cosine fold, the
     # same (variant, query) rank windows — so every output value is
     # bit-identical to the per-variant form.
@@ -6484,17 +6488,17 @@ def sim_ann_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("cell") == F.col("probe_cell"))
         & (F.col("vec_id") != F.col("query_id")),
     ).select(
-        (F.col("iv").cast("bigint") * 1000 + F.col("query_id")).alias(
-            "query_id"
-        ),
+        (
+            F.col("iv").cast("bigint") * RECALL_KEY_BASE + F.col("query_id")
+        ).alias("query_id"),
         "vec_id",
         (
             F.expr(_spark_dot("qemb", "emb")) / (F.col("qnrm") * F.col("nrm"))
         ).alias("cosine"),
     )
     vtop = _two_phase_topk(scored, TOP_K, base=idx_all).select(
-        F.expr("query_id div 1000").cast("int").alias("iv"),
-        F.expr("query_id % 1000").alias("query_id"),
+        F.expr(f"query_id div {RECALL_KEY_BASE}").cast("int").alias("iv"),
+        F.expr(f"query_id % {RECALL_KEY_BASE}").alias("query_id"),
         "vec_id",
     )
     hits = (
@@ -6534,7 +6538,7 @@ def sim_ann_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(float(RECALL_QUERIES * TOP_K))
             ).alias("recall"),
             (
-                F.col("tot").cast("double")
+                F.coalesce(F.col("tot"), F.lit(0).cast("bigint")).cast("double")
                 / (F.col("n") * F.lit(float(RECALL_QUERIES)))
             ).alias("scan_frac"),
         )

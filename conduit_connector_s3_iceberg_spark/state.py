@@ -10,6 +10,8 @@ index gets all of them for free:
   generation-scoped directories that no reader lists until the manifest
   names them, then replaces ``manifest.json`` via ``os.replace`` —
   readers see old-or-new, never a torn file or a half-applied write.
+  That write is :func:`write_json_atomic`, which ``writer.
+  ParquetWarehouse`` tables share for their pointer and metadata files.
   (The parquet analogue of Iceberg's manifest-list commit,
   ``SparkUtils.java:45-51`` being the reference's Iceberg bootstrap.)
 * **Snapshot-keyed freshness.** ``corpus_snapshot`` records per-file
@@ -111,6 +113,19 @@ def snapshot_delta(old: dict, cur: dict) -> tuple[str, list[str]]:
     ):
         return "appended", sorted(k for k in cur if k not in old)
     return "rewritten", []
+
+
+def write_json_atomic(path: str, value) -> None:
+    """The one atomic JSON write behind every commit point: a state root's
+    ``manifest.json`` and a ``writer.ParquetWarehouse`` table's ``CURRENT``,
+    ``_MARKS.json``, ``SCHEMA``, ``SPEC`` and ``TAGS``. The JSON goes to a
+    temp sibling that ``os.replace`` moves over ``path``, so a reader sees
+    the old file or the new one, never a torn one. Durability (fsync)
+    belongs here, once for both kinds of root."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(value, fh)
+    os.replace(tmp, path)
 
 
 def read_manifest(root: str) -> dict | None:
@@ -217,10 +232,7 @@ def write_manifest(
             )
         manifest = dict(manifest)
         manifest["commit_seq"] = cur_seq + 1
-        tmp = os.path.join(root, "manifest.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(root, "manifest.json"))
+        write_json_atomic(os.path.join(root, "manifest.json"), manifest)
         return manifest
     finally:
         with contextlib.suppress(OSError):

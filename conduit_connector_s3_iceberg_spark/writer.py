@@ -38,6 +38,15 @@ run led by an update or delete, ``merge_apply`` for a collapsed batch.
 functionally what Iceberg CoW does, minus snapshot isolation (single-writer
 only; documented). ``iceberg.IcebergTableStore`` implements it as Iceberg
 appends and row-level MERGE against a live catalog.
+
+A :class:`ParquetWarehouse` table is a directory of immutable ``v-<uuid>``
+version directories (data files, ``_deletes/`` equality-delete files,
+``_MARKS.json``) plus ``CURRENT``, ``LOG``, ``SCHEMA``, ``SPEC`` and
+``TAGS``. Every version comes from one path, as every Iceberg write is one
+commit (``SparkUtils.java:45-51``): **write** the new rows into a fresh
+version directory (``_write``), **carry** the parent's kept files into it
+as hardlinks (``_link_files``), **commit** it (``_commit``, the single
+publish point: the ``CURRENT`` pointer swap and the ``LOG`` line).
 """
 
 from __future__ import annotations
@@ -61,6 +70,7 @@ from .records import (
     normalize_payload_json,
     struct_key_to_map,
 )
+from .state import write_json_atomic
 
 
 def arrow_frame(spark: SparkSession, columns: dict[str, Any]) -> DataFrame:
@@ -120,9 +130,27 @@ class ParquetWarehouse:
 
     Stand-in for the Iceberg catalog when the runtime jar is absent: the
     same :class:`TableStore` contract, the same observable results.
-    Each mutation writes a fresh table version directory and atomically
-    repoints a symlink-like 'current' marker — the same shape as Iceberg's
-    snapshot pointer, minus the manifest layer.
+
+    A table ``<root>/<table>/`` holds:
+
+    * ``v-<uuid>/``, one immutable directory per committed version: its
+      parquet data files (under hive ``col=value/`` directories when the
+      table has a partition spec), its ``_deletes/`` equality-delete files
+      (merge-on-read) and ``_MARKS.json``, the idempotence marks live when
+      it committed. Files a version shares with its parent are hardlinks.
+    * ``CURRENT``, the snapshot pointer ``{"version", "marks"}`` (a plain
+      version name is the legacy form and still reads).
+    * ``LOG``, one version name per commit, oldest first.
+    * ``SCHEMA``, ``SPEC`` and ``TAGS``: table metadata.
+
+    Every mutation that makes a version takes the same three steps, like an
+    Iceberg commit: :meth:`_write` writes the new rows into a fresh version
+    directory; :meth:`_link_files` hardlinks the parent's files the version
+    keeps (the carried manifests of an Iceberg snapshot); :meth:`_commit`
+    publishes the directory. ``_commit`` is the single publish point: no
+    reader sees a version before it. Every JSON file goes through
+    ``state.write_json_atomic``. Single-writer only: the pointer swap is
+    not a compare-and-swap.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -133,6 +161,17 @@ class ParquetWarehouse:
     # -- catalog ------------------------------------------------------------
     def _dir(self, table: str) -> str:
         return os.path.join(self.root, table)
+
+    def _load(self, table: str, name: str, default: Any = None) -> Any:
+        """The JSON file ``name`` under the table's directory, or ``default``."""
+        path = os.path.join(self._dir(table), name)
+        if not os.path.exists(path):
+            return default
+        with open(path) as fh:
+            return json.load(fh)
+
+    def _store(self, table: str, name: str, value: Any) -> None:
+        write_json_atomic(os.path.join(self._dir(table), name), value)
 
     # cap on remembered idempotence marks: Structured Streaming only ever
     # re-delivers the LAST unacknowledged epoch per checkpoint, so a short
@@ -152,6 +191,77 @@ class ParquetWarehouse:
             self._dir(table), self._current_state(table)["version"]
         )
 
+    def _write(
+        self,
+        table: str,
+        df: DataFrame,
+        spec: dict | None = None,
+        finish=None,
+        sub: str = "",
+    ) -> str:
+        """Write ``df`` into a fresh ``v-<uuid>`` version directory (into its
+        ``sub`` directory when given, e.g. ``_deletes``) and return the
+        version directory. Nothing is visible until :meth:`_commit`.
+
+        The rows follow ``spec`` (default: the table's): hive-layout
+        partition dirs, and the declared write sort order — Iceberg's
+        ``write.distribution-mode=range`` + ``WRITE ORDERED BY``:
+        range-partition on the sort key (one shuffle), then a local
+        per-task sort, so each parquet file covers a narrow, disjoint
+        sort-key range and row-group min/max stats actually skip files.
+
+        ``finish`` maps the laid-out frame to the rows written. It applies
+        above the range exchange, whose sampling job reads every row below
+        it, so an ``observe`` inside ``finish`` counts each row once."""
+        version_dir = os.path.join(self._dir(table), f"v-{uuid.uuid4().hex}")
+        if spec is None:
+            spec = self._spec(table)
+        if spec["sort_by"]:
+            n = max(df.rdd.getNumPartitions(), 1)
+            df = df.repartitionByRange(n, *spec["sort_by"]).sortWithinPartitions(
+                *(spec["partition_by"] + spec["sort_by"])
+            )
+        if finish is not None:
+            df = finish(df)
+        writer = df.write.mode("overwrite")
+        if spec["partition_by"]:
+            writer = writer.partitionBy(*spec["partition_by"])
+        writer.parquet(os.path.join(version_dir, sub))
+        return version_dir
+
+    def _link_files(
+        self, src: str, dst: str, skip_dirs: set[str] = frozenset()
+    ) -> None:
+        """Carry the parent version ``src`` into the written version ``dst``:
+        hardlink its data files, preserving partition sub-paths, except
+        those under a relative dir in ``skip_dirs`` (partitions being
+        replaced), and all its ``_deletes/`` files. Spark part names carry a
+        per-write UUID, so a carried file never collides with a new one.
+
+        This is where carried files meet newly written ones, so it refuses
+        to mix partition layouts: after a rollback across
+        :meth:`evolve_partition_spec` the carried files sit at another hive
+        depth than the new ones, and a version holding both breaks
+        partition discovery. ``dst`` is then removed and nothing commits."""
+        carried = [
+            rel for rel in self._data_files(src)
+            if os.path.dirname(rel) not in skip_dirs
+        ]
+        old = {rel.count(os.sep) for rel in carried}
+        new = {rel.count(os.sep) for rel in self._data_files(dst)}
+        if len(old | new) > 1:
+            shutil.rmtree(dst, ignore_errors=True)
+            raise ValueError(
+                "the current snapshot was written under another partition "
+                f"layout (depth {sorted(old)}) than the table spec (depth "
+                f"{sorted(new)}); run evolve_partition_spec() to rewrite it "
+                "into the current spec before writing"
+            )
+        carried += [os.path.relpath(f, src) for f in self._delete_files(src)]
+        for rel in carried:
+            os.makedirs(os.path.dirname(os.path.join(dst, rel)), exist_ok=True)
+            os.link(os.path.join(src, rel), os.path.join(dst, rel))
+
     def _commit(
         self,
         table: str,
@@ -159,14 +269,17 @@ class ParquetWarehouse:
         mark: str | None = None,
         marks_override: dict | None = None,
     ) -> None:
-        """Atomic snapshot pointer swap. ``mark`` is an idempotence token
-        (e.g. ``e<epoch>``) recorded IN THE SAME os.replace as the version
-        pointer — so 'this epoch's write committed to this table' and the
-        data it committed become one atomic fact. That closes the
-        mid-epoch crash window of multi-table epoch application: each
-        table independently remembers whether the epoch's write landed,
-        and a replay skips exactly the tables that already committed
-        (see :meth:`append`'s ``mark`` and :func:`mark_epoch_applied`).
+        """Publish ``version_dir``: the atomic snapshot pointer swap and the
+        LOG line. This is the only place a version becomes visible.
+
+        ``mark`` is an idempotence token (e.g. ``e<epoch>``) recorded IN THE
+        SAME pointer swap as the version — so 'this epoch's write committed
+        to this table' and the data it committed become one atomic fact.
+        That closes the mid-epoch crash window of multi-table epoch
+        application: each table independently remembers whether the
+        epoch's write landed, and a replay skips exactly the tables that
+        already committed (see :meth:`append`'s ``mark`` and
+        :func:`mark_epoch_applied`).
 
         ``marks_override`` replaces the carried-forward marks dict wholesale
         (rollback restores the marks AS OF the target snapshot — see
@@ -175,10 +288,9 @@ class ParquetWarehouse:
         parquet reader treats it as hidden, like ``_deletes``), so every
         snapshot carries the marks that were live when it committed and a
         later rollback can restore them exactly."""
-        marker = os.path.join(self._dir(table), "CURRENT")
         if marks_override is not None:
             marks = dict(marks_override)
-        elif os.path.exists(marker):
+        elif self.table_exists(table):
             marks = self._current_state(table).get("marks", {})
         else:
             marks = {}
@@ -187,29 +299,17 @@ class ParquetWarehouse:
             marks[str(mark)] = os.path.basename(version_dir)
             while len(marks) > self.MAX_COMMIT_MARKS:
                 marks.pop(next(iter(marks)))
-        marks_path = os.path.join(version_dir, "_MARKS.json")
-        marks_tmp = marks_path + ".tmp"
-        with open(marks_tmp, "w") as fh:
-            json.dump(marks, fh)
-        os.replace(marks_tmp, marks_path)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"version": os.path.basename(version_dir), "marks": marks}, fh
-            )
-        os.replace(tmp, marker)  # atomic snapshot pointer swap
+        write_json_atomic(os.path.join(version_dir, "_MARKS.json"), marks)
+        version = os.path.basename(version_dir)
+        self._store(table, "CURRENT", {"version": version, "marks": marks})
         with open(os.path.join(self._dir(table), "LOG"), "a") as fh:
-            fh.write(os.path.basename(version_dir) + "\n")
+            fh.write(version + "\n")
 
     def _version_marks(self, table: str, version: str) -> dict:
         """Marks state as of the commit that produced ``version`` (empty for
         snapshots written before marks persistence — conservative: a replay
         then re-applies, matching the old clear-all behavior)."""
-        path = os.path.join(self._dir(table), version, "_MARKS.json")
-        if not os.path.exists(path):
-            return {}
-        with open(path) as fh:
-            return json.load(fh)
+        return self._load(table, os.path.join(version, "_MARKS.json"), {})
 
     def mark_applied(self, table: str, mark: str) -> bool:
         """True if a commit carrying ``mark`` already landed on ``table``
@@ -236,34 +336,18 @@ class ParquetWarehouse:
         selective (Iceberg's metrics-based file skipping).
         """
         os.makedirs(self._dir(table), exist_ok=True)
-        spec = {"partition_by": partition_by or [], "sort_by": sort_by or []}
         if partition_by or sort_by:
-            with open(os.path.join(self._dir(table), "SPEC"), "w") as fh:
-                json.dump(spec, fh)
-        self._store_schema(table, schema)
+            self._store(
+                table,
+                "SPEC",
+                {"partition_by": partition_by or [], "sort_by": sort_by or []},
+            )
+        self._store(table, "SCHEMA", schema.jsonValue())
         empty = self.spark.createDataFrame([], schema)
-        self._write_version(table, empty)
-
-    def _store_schema(self, table: str, schema: T.StructType) -> None:
-        path = os.path.join(self._dir(table), "SCHEMA")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(schema.jsonValue(), fh)
-        os.replace(tmp, path)
+        self._commit(table, self._write(table, empty))
 
     def _spec(self, table: str) -> dict:
-        path = os.path.join(self._dir(table), "SPEC")
-        if not os.path.exists(path):
-            return {"partition_by": [], "sort_by": []}
-        with open(path) as fh:
-            return json.load(fh)
-
-    def _store_spec(self, table: str, spec: dict) -> None:
-        path = os.path.join(self._dir(table), "SPEC")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(spec, fh)
-        os.replace(tmp, path)
+        return self._load(table, "SPEC") or {"partition_by": [], "sort_by": []}
 
     def table_exists(self, table: str) -> bool:
         return os.path.exists(os.path.join(self._dir(table), "CURRENT"))
@@ -311,54 +395,13 @@ class ParquetWarehouse:
         return base.join(F.broadcast(dels), dels.columns, "left_anti")
 
     def _stored_schema(self, table: str) -> T.StructType | None:
-        path = os.path.join(self._dir(table), "SCHEMA")
-        if not os.path.exists(path):
-            return None  # table predates schema tracking: infer from files
-        with open(path) as fh:
-            return T.StructType.fromJson(json.load(fh))
+        stored = self._load(table, "SCHEMA")
+        # None: the table predates schema tracking, infer from files
+        return None if stored is None else T.StructType.fromJson(stored)
 
     def schema(self, table: str) -> T.StructType:
         stored = self._stored_schema(table)
         return stored if stored is not None else self.read(table).schema
-
-    def _write_version(
-        self, table: str, df: DataFrame, mark: str | None = None
-    ) -> None:
-        version_dir = os.path.join(self._dir(table), f"v-{uuid.uuid4().hex}")
-        self._write_data(table, df, version_dir)
-        self._commit(table, version_dir, mark=mark)
-
-    def _write_data(
-        self,
-        table: str,
-        df: DataFrame,
-        out_dir: str,
-        spec: dict | None = None,
-        finish=None,
-    ) -> None:
-        """Write one version's data files honoring the table spec:
-        hive-layout partition dirs, and the declared write sort order —
-        Iceberg's ``write.distribution-mode=range`` + ``WRITE ORDERED BY``:
-        range-partition on the sort key (one shuffle), then a local
-        per-task sort, so each parquet file covers a narrow, disjoint
-        sort-key range and row-group min/max stats actually skip files.
-
-        ``finish`` maps the laid-out frame to the rows written. It applies
-        above the range exchange, whose sampling job reads every row below
-        it, so an ``observe`` inside ``finish`` counts each row once."""
-        if spec is None:
-            spec = self._spec(table)
-        if spec["sort_by"]:
-            n = max(df.rdd.getNumPartitions(), 1)
-            df = df.repartitionByRange(n, *spec["sort_by"]).sortWithinPartitions(
-                *(spec["partition_by"] + spec["sort_by"])
-            )
-        if finish is not None:
-            df = finish(df)
-        writer = df.write.mode("overwrite")
-        if spec["partition_by"]:
-            writer = writer.partitionBy(*spec["partition_by"])
-        writer.parquet(out_dir)
 
     @staticmethod
     def _data_files(version_dir: str) -> list[str]:
@@ -374,20 +417,6 @@ class ParquetWarehouse:
                     out.append(name if rel == "." else os.path.join(rel, name))
         return out
 
-    def _link_files(
-        self, src: str, dst: str, skip_dirs: set[str] | None = None
-    ) -> None:
-        """Hardlink every data file from ``src`` into ``dst``, preserving
-        partition sub-paths; files under a relative dir in ``skip_dirs``
-        are left out (the partitions being replaced)."""
-        for rel in self._data_files(src):
-            rel_dir = os.path.dirname(rel)
-            if skip_dirs is not None and rel_dir in skip_dirs:
-                continue
-            if rel_dir:
-                os.makedirs(os.path.join(dst, rel_dir), exist_ok=True)
-            os.link(os.path.join(src, rel), os.path.join(dst, rel))
-
     @staticmethod
     def _delete_files(version_dir: str) -> list[str]:
         ddir = os.path.join(version_dir, "_deletes")
@@ -398,15 +427,6 @@ class ParquetWarehouse:
             for f in os.listdir(ddir)
             if f.endswith(".parquet")
         )
-
-    def _link_deletes(self, src: str, dst: str) -> None:
-        files = self._delete_files(src)
-        if not files:
-            return
-        ddir = os.path.join(dst, "_deletes")
-        os.makedirs(ddir, exist_ok=True)
-        for f in files:
-            os.link(f, os.path.join(ddir, os.path.basename(f)))
 
     # -- merge-on-read deletes (Iceberg v2 equality-delete files) -----------
     def delete_keys_mor(
@@ -429,8 +449,7 @@ class ParquetWarehouse:
         if missing:
             raise ValueError(f"unknown key columns {missing} for {table!r}")
         current = self._current_path(table)
-        existing = self._delete_files(current)
-        if existing:
+        if self._delete_files(current):
             prior_cols = self.spark.read.parquet(
                 os.path.join(current, "_deletes")
             ).columns
@@ -439,24 +458,13 @@ class ParquetWarehouse:
                     f"table {table!r} already has delete files keyed by "
                     f"{prior_cols}; all MoR deletes must share one key set"
                 )
-        version_dir = os.path.join(self._dir(table), f"v-{uuid.uuid4().hex}")
-        staging = version_dir + ".stage"
-        keys.select(*key_cols).distinct().write.mode("overwrite").parquet(
-            staging
+        version_dir = self._write(
+            table,
+            keys.select(*key_cols).distinct(),
+            spec={"partition_by": [], "sort_by": []},
+            sub="_deletes",
         )
-        os.makedirs(version_dir)
         self._link_files(current, version_dir)
-        self._link_deletes(current, version_dir)
-        ddir = os.path.join(version_dir, "_deletes")
-        os.makedirs(ddir, exist_ok=True)
-        n = 0
-        for rel in self._data_files(staging):
-            os.rename(
-                os.path.join(staging, rel),
-                os.path.join(ddir, f"del-{uuid.uuid4().hex}-{n}.parquet"),
-            )
-            n += 1
-        shutil.rmtree(staging, ignore_errors=True)
         self._commit(table, version_dir)
         return {
             "delete_files": len(self._delete_files(version_dir)),
@@ -467,11 +475,9 @@ class ParquetWarehouse:
         """Materialize pending MoR deletes into the data files (one CoW
         rewrite — Iceberg's ``rewrite_position_delete_files`` / minor
         compaction). After this, scans pay zero anti-join overhead."""
-        current = self._current_path(table)
-        pending = len(self._delete_files(current))
-        if not pending:
-            return {"delete_files_applied": 0}
-        self._write_version(table, self.read(table))
+        pending = len(self._delete_files(self._current_path(table)))
+        if pending:
+            self._commit(table, self._write(table, self.read(table)))
         return {"delete_files_applied": pending}
 
     # -- mutations (CoW) ----------------------------------------------------
@@ -499,31 +505,15 @@ class ParquetWarehouse:
         if mark is not None and self.mark_applied(table, mark):
             return
         current = self._current_path(table)
-        self._check_layout_matches_spec(table, current)
         if self._delete_files(current):
             dels = self.spark.read.parquet(os.path.join(current, "_deletes"))
             if not df.join(dels, dels.columns, "left_semi").isEmpty():
                 merged = self.read(table).unionByName(df, allowMissingColumns=True)
-                self._write_version(table, merged, mark=mark)
+                self._commit(table, self._write(table, merged), mark=mark)
                 return
-        version_dir = os.path.join(self._dir(table), f"v-{uuid.uuid4().hex}")
-        staging = version_dir + ".stage"
-        self._write_data(table, df, staging)
-        os.makedirs(version_dir)
+        version_dir = self._write(table, df)
         self._link_files(current, version_dir)
-        self._link_deletes(current, version_dir)
-        # Spark part filenames embed a per-write UUID → no collisions
-        self._move_files(staging, version_dir)
         self._commit(table, version_dir, mark=mark)
-
-    @staticmethod
-    def _move_files(staging: str, version_dir: str) -> None:
-        for rel in ParquetWarehouse._data_files(staging):
-            rel_dir = os.path.dirname(rel)
-            if rel_dir:
-                os.makedirs(os.path.join(version_dir, rel_dir), exist_ok=True)
-            os.rename(os.path.join(staging, rel), os.path.join(version_dir, rel))
-        shutil.rmtree(staging, ignore_errors=True)
 
     def overwrite_partitions(self, table: str, df: DataFrame) -> dict:
         """Dynamic-partition overwrite (Iceberg ``writeTo(t).
@@ -545,13 +535,9 @@ class ParquetWarehouse:
                 f"table {table!r} has pending MoR delete files; run "
                 "rewrite_deletes() before overwrite_partitions()"
             )
-        version_dir = os.path.join(self._dir(table), f"v-{uuid.uuid4().hex}")
-        staging = version_dir + ".stage"
-        self._write_data(table, df, staging)
-        touched = {os.path.dirname(rel) for rel in self._data_files(staging)}
-        os.makedirs(version_dir)
+        version_dir = self._write(table, df, spec=spec)
+        touched = {os.path.dirname(rel) for rel in self._data_files(version_dir)}
         self._link_files(current, version_dir, skip_dirs=touched)
-        self._move_files(staging, version_dir)
         self._commit(table, version_dir)
         return {"replaced_partitions": sorted(touched)}
 
@@ -562,11 +548,9 @@ class ParquetWarehouse:
         goes, and commits only if there were any. Returns that count."""
         hit = F.coalesce(predicate, F.lit(False))
         deleted = Observation()
-        version_dir = os.path.join(self._dir(table), f"v-{uuid.uuid4().hex}")
-        self._write_data(
+        version_dir = self._write(
             table,
             self.read(table),
-            version_dir,
             finish=lambda df: df.observe(deleted, F.count_if(hit).alias("n"))
             .filter(~hit),
         )
@@ -584,7 +568,7 @@ class ParquetWarehouse:
         epoch write exactly like :meth:`append`'s."""
         if mark is not None and self.mark_applied(table, mark):
             return
-        self._write_version(table, df, mark=mark)
+        self._commit(table, self._write(table, df), mark=mark)
 
     @staticmethod
     def _key_predicate(key_map: dict[str, Any], schema: T.StructType) -> F.Column:
@@ -632,25 +616,6 @@ class ParquetWarehouse:
         self.overwrite_with(table, kept.unionByName(upserts))
 
     # -- snapshots: history / time travel / rollback ------------------------
-    def _check_layout_matches_spec(self, table: str, version_path: str) -> None:
-        """Guard for rollbacks across a partition evolution: linking files
-        written under a DIFFERENT spec into a new version would mix hive
-        directory depths and break partition discovery. Depth of a file's
-        partition path must equal the current spec's column count."""
-        files = self._data_files(version_path)
-        if not files:
-            return
-        expected = len(self._spec(table)["partition_by"])
-        rel_dir = os.path.dirname(files[0])
-        depth = 0 if not rel_dir else len(rel_dir.split(os.sep))
-        if depth != expected:
-            raise ValueError(
-                f"current snapshot of {table!r} was written under a "
-                f"{depth}-column partition layout but the table spec now "
-                f"has {expected}; run evolve_partition_spec() to rewrite "
-                "the snapshot into the current spec before appending"
-            )
-
     def evolve_partition_spec(
         self,
         table: str,
@@ -670,22 +635,18 @@ class ParquetWarehouse:
         evolution time: cost O(table) once, after which every new write and
         every scan sees a single consistent spec and full directory
         pruning. History is preserved — pre-evolution snapshots remain
-        time-travel-readable under their old layout; appending after a
-        rollback across the evolution boundary is refused (see
-        ``_check_layout_matches_spec``) instead of corrupting discovery.
+        time-travel-readable under their old layout; a write that would
+        carry them into a new version after a rollback across the evolution
+        boundary is refused (see :meth:`_link_files`) instead of corrupting
+        discovery.
         """
         old = self._spec(table)
         new_spec = {
             "partition_by": partition_by or [],
             "sort_by": old["sort_by"] if sort_by is None else sort_by,
         }
-        snapshot = self.read(table)
-        version_dir = os.path.join(self._dir(table), f"v-{uuid.uuid4().hex}")
-        staging = version_dir + ".stage"
-        self._write_data(table, snapshot, staging, spec=new_spec)
-        os.makedirs(version_dir)
-        self._move_files(staging, version_dir)
-        self._store_spec(table, new_spec)
+        version_dir = self._write(table, self.read(table), spec=new_spec)
+        self._store(table, "SPEC", new_spec)
         self._commit(table, version_dir)
         return {
             "previous": old,
@@ -732,15 +693,8 @@ class ParquetWarehouse:
         return version
 
     # -- named refs (Iceberg tags: immutable snapshot names) ---------------
-    def _tags_path(self, table: str) -> str:
-        return os.path.join(self._dir(table), "TAGS")
-
     def tags(self, table: str) -> dict[str, str]:
-        path = self._tags_path(table)
-        if not os.path.exists(path):
-            return {}
-        with open(path) as fh:
-            return json.load(fh)
+        return self._load(table, "TAGS", {})
 
     def create_tag(
         self, table: str, name: str, version: int | str | None = None
@@ -762,19 +716,13 @@ class ParquetWarehouse:
         if name in tags:
             raise ValueError(f"tag {name!r} already exists on {table!r}")
         tags[name] = target
-        tmp = self._tags_path(table) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(tags, fh)
-        os.replace(tmp, self._tags_path(table))
+        self._store(table, "TAGS", tags)
         return target
 
     def drop_tag(self, table: str, name: str) -> None:
         tags = self.tags(table)
         tags.pop(name, None)
-        tmp = self._tags_path(table) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(tags, fh)
-        os.replace(tmp, self._tags_path(table))
+        self._store(table, "TAGS", tags)
 
     def expire_snapshots(self, table: str, keep_last: int = 1) -> dict:
         """Drop all but the newest ``keep_last`` snapshots (never the
@@ -809,9 +757,8 @@ class ParquetWarehouse:
         schema = self.schema(table)
         if name in schema.fieldNames():
             raise ValueError(f"column {name!r} already exists in {table!r}")
-        self._store_schema(
-            table, T.StructType(schema.fields + [T.StructField(name, dtype, True)])
-        )
+        fields = schema.fields + [T.StructField(name, dtype, True)]
+        self._store(table, "SCHEMA", T.StructType(fields).jsonValue())
 
     def drop_column(self, table: str, name: str) -> None:
         """Metadata-only column drop: the column stops being projected;
@@ -828,29 +775,33 @@ class ParquetWarehouse:
             raise ValueError(f"cannot drop partition column {name!r}")
         if name in spec["sort_by"]:
             spec["sort_by"] = [c for c in spec["sort_by"] if c != name]
-            self._store_spec(table, spec)
-        self._store_schema(
-            table, T.StructType([f for f in schema.fields if f.name != name])
-        )
+            self._store(table, "SPEC", spec)
+        fields = [f for f in schema.fields if f.name != name]
+        self._store(table, "SCHEMA", T.StructType(fields).jsonValue())
 
     def rename_column(self, table: str, old: str, new: str) -> None:
         """Column rename. Iceberg does this metadata-only via field ids;
         parquet name-based resolution can't, so this is a CoW rewrite of
-        the current version (O(table) — the honest cost of the stand-in)."""
+        the current version (O(table) — the honest cost of the stand-in).
+        The spec and schema are stored only once the rewrite is written."""
         schema = self.schema(table)
         if old not in schema.fieldNames():
             raise ValueError(f"no column {old!r} in {table!r}")
+        if new in schema.fieldNames():
+            raise ValueError(f"column {new!r} already exists in {table!r}")
         spec = self._spec(table)
         if old in spec["partition_by"]:
             # old versions' hive dirs are named after the old column; a
             # rename would orphan them for time travel — not supported
             raise ValueError(f"cannot rename partition column {old!r}")
-        if old in spec["sort_by"]:
-            spec["sort_by"] = [new if c == old else c for c in spec["sort_by"]]
-            self._store_spec(table, spec)
+        sort_by = [new if c == old else c for c in spec["sort_by"]]
+        new_spec = {**spec, "sort_by": sort_by}
         renamed = self.read(table).withColumnRenamed(old, new)
-        self._store_schema(table, renamed.schema)
-        self._write_version(table, renamed)
+        version_dir = self._write(table, renamed, spec=new_spec)
+        if new_spec != spec:
+            self._store(table, "SPEC", new_spec)
+        self._store(table, "SCHEMA", renamed.schema.jsonValue())
+        self._commit(table, version_dir)
 
     # -- maintenance (Iceberg `rewrite_data_files` / `expire_snapshots`
     #    analogs; SURVEY.md §7 Phase 5) ------------------------------------
@@ -878,7 +829,7 @@ class ParquetWarehouse:
             cur = cur.repartition(n, *spec["partition_by"])
         else:
             cur = cur.repartition(n)
-        self._write_version(table, cur)
+        self._commit(table, self._write(table, cur))
         return {"files_before": before, "files_after": self.num_data_files(table)}
 
 
