@@ -1,7 +1,9 @@
 """Canonical protobuf-JSON codec for the plugin wire.
 
 The NDJSON transport's message payloads follow the standard protobuf
-JSON mapping (protojson) of the reference's service contract —
+JSON mapping (protojson) of the reference's service contract, and a
+record frame has exactly this one shape: :func:`record_from_proto_json`
+is the only record decoder —
 ``connector.proto`` (``DestinationPlugin`` at :84-131, message trees at
 :221-383) and ``opencdc.proto`` (``Record``/``Change``/``Data`` at
 :52-97) — so that a future gRPC binding is a pure codec swap with zero
@@ -41,6 +43,7 @@ __all__ = [
     "data_from_proto_json",
     "record_to_proto_json",
     "record_from_proto_json",
+    "unb64",
     "run_response_to_proto_json",
     "specify_response_to_proto_json",
 ]
@@ -136,8 +139,9 @@ def _b64(b: bytes) -> str:
     return base64.b64encode(b).decode("ascii")
 
 
-def _unb64(s: str) -> bytes:
-    return base64.b64decode(s.encode("ascii"))
+def unb64(s: str) -> bytes:
+    """A proto-JSON ``bytes`` field; anything but strict base64 raises."""
+    return base64.b64decode(s, validate=True)
 
 
 def data_to_proto_json(v: bytes | dict | None) -> dict[str, Any] | None:
@@ -159,7 +163,7 @@ def data_from_proto_json(d: dict[str, Any] | None) -> bytes | dict | None:
     if has_raw and has_struct:
         raise ValueError("Data oneof carries both rawData and structuredData")
     if has_raw:
-        return _unb64(d["rawData"])
+        return unb64(d["rawData"])
     if has_struct:
         return dict(d["structuredData"])
     raise ValueError("Data oneof carries neither rawData nor structuredData")
@@ -190,48 +194,21 @@ def record_to_proto_json(r: Record) -> dict[str, Any]:
 
 
 def record_from_proto_json(msg: dict[str, Any]) -> Record:
+    """The one decoder of a wire record. Omitted fields take their proto
+    defaults, as canonical marshalers omit them; an operation spelling
+    other than ``OPERATION_*`` raises."""
     payload = msg.get("payload") or {}
+    op = msg.get("operation", "OPERATION_UNSPECIFIED")
+    if op not in OPERATION_FROM_PROTO:
+        raise ValueError(f"unknown operation: {op}")
     return Record(
-        position=_unb64(msg.get("position", "")),
-        operation=OPERATION_FROM_PROTO[
-            msg.get("operation", "OPERATION_UNSPECIFIED")
-        ],
+        position=unb64(msg.get("position", "")),
+        operation=OPERATION_FROM_PROTO[op],
         key=data_from_proto_json(msg.get("key")),
         payload_before=data_from_proto_json(payload.get("before")),
         payload_after=data_from_proto_json(payload.get("after")),
         metadata=dict(msg.get("metadata") or {}),
     )
-
-
-def is_proto_json_record(msg: dict[str, Any]) -> bool:
-    """Discriminate the proto-JSON record shape from the legacy test
-    shape (``{"raw": ...}``/``{"struct": ...}`` arms, lowercase op).
-
-    Proto-JSON is the DEFAULT: canonical protojson marshalers (e.g. a Go
-    host using ``protojson.Marshal``) omit default-valued fields, so a
-    record like ``{"position": "AAFwb3M="}`` — operation
-    ``OPERATION_UNSPECIFIED`` omitted, no ``Data`` arms — must still route
-    here (base64 position), not to the legacy decoder (which would keep
-    the base64 string as literal UTF-8 bytes).  Only an explicit legacy
-    marker (a ``raw``/``struct`` arm or a lowercase op spelling) selects
-    the legacy path.
-    """
-    op = msg.get("operation", "")
-    if isinstance(op, str) and op.startswith("OPERATION_"):
-        return True
-    legacy = False
-    for arm in (msg.get("key"), (msg.get("payload") or {}).get("after"),
-                (msg.get("payload") or {}).get("before")):
-        if isinstance(arm, dict):
-            if "rawData" in arm or "structuredData" in arm:
-                return True
-            if "raw" in arm or "struct" in arm:
-                legacy = True
-    if legacy:
-        return False
-    if isinstance(op, str) and op and not op.startswith("OPERATION_"):
-        return False  # lowercase legacy spelling ("create", "delete", ...)
-    return True
 
 
 def run_response_to_proto_json(ack_position: bytes, error: str = "") -> dict:

@@ -22,11 +22,17 @@ Wire protocol (client → server, one JSON object per line):
 * ``{"rpc": "configure", "config": {...}}``
 * ``{"rpc": "start"}``
 * ``{"rpc": "run"}`` — opens the record stream; afterwards each
-  ``{"record": {...}}`` line is one ``Run.Request`` and each response
-  line is an ack ``{"ok": true, "ack_position": "..."}`` or a terminal
+  ``{"record": {...}}`` line is one ``Run.Request`` whose record is a
+  proto-JSON ``opencdc.v1.Record`` (the only record shape: a frame that
+  does not decode gets one error and closes the stream), and each response
+  line is an ack ``{"ok": true, "response": {"ackPosition": "<base64>",
+  "error": ""}}`` or a terminal
   ``{"error": {...}}``; ``{"end": true}`` half-closes the stream (no
   reply).
 * ``{"rpc": "stop"}`` / ``{"rpc": "teardown"}``
+
+A unary call's request message is its ``"request"`` subtree, or else the
+frame's bare top-level fields (``{"rpc": "configure", "config": {...}}``).
 
 Group commit: every complete record frame in one socket read goes to the
 stream as one group (see :class:`~.service.DestinationStream`): its
@@ -44,7 +50,6 @@ Server → client unary responses: ``{"ok": true, ...fields}`` or
 
 from __future__ import annotations
 
-import base64
 import dataclasses
 import json
 import select
@@ -58,6 +63,7 @@ from typing import Any
 from .protojson import (
     run_response_to_proto_json,
     specify_response_to_proto_json,
+    unb64,
 )
 from .service import (
     ConfigureRequest,
@@ -247,8 +253,10 @@ class _Handler(socketserver.StreamRequestHandler):
             return run_stream, False
         rpc = msg.get("rpc")
         # the "request" subtree is the RPC's proto-JSON request message
-        # (connector.proto:221-324); bare top-level fields are the pre-r6
-        # shorthand, still accepted
+        # (connector.proto:221-324). Bare top-level fields (``{"rpc":
+        # "configure", "config": {...}}``) are read too: clients such as the
+        # perfbench driver send them, and a unary request holds no record,
+        # so reading them needs no second decoder
         req = msg.get("request") or msg
         obs = _LineObserver(self.wfile)
         if rpc == "specify":
@@ -267,15 +275,13 @@ class _Handler(socketserver.StreamRequestHandler):
                     {"error": {"code": code, "description": str(e)}}
                 )
         elif rpc == "stop":
-            last = req.get("lastPosition")
-            dest.stop(
-                StopRequest(
-                    last_position=(
-                        base64.b64decode(last) if last is not None else None
-                    )
-                ),
-                obs,
-            )
+            try:
+                last = req.get("lastPosition")
+                stop = StopRequest(None if last is None else unb64(last))
+            except (TypeError, ValueError) as e:
+                obs.on_error(ServiceError(f"couldn't stop: {e}"))
+            else:
+                dest.stop(stop, obs)
         elif rpc == "teardown":
             dest.teardown(TeardownRequest(), obs)
             if server.exit_on_teardown:

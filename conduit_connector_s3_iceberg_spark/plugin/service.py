@@ -47,9 +47,10 @@ import threading
 from dataclasses import dataclass, field
 from typing import Any, Callable, Protocol
 
-from ..records import Operation, Record
+from ..records import Record
 from ..session import ConnectorConfig, spec
 from ..writer import CdcWriter
+from .protojson import record_from_proto_json
 
 __all__ = [
     "ServiceError",
@@ -162,40 +163,12 @@ class SpecifyResponse:
 
 
 def record_from_wire(msg: dict[str, Any]) -> Record:
-    """Decode the JSON-wire form of an OpenCDC record
-    (``Destination.Run.Request.record``).
-
-    The canonical shape is the protobuf-JSON mapping of
-    ``opencdc.v1.Record`` (``opencdc.proto:52-97``): base64 ``position``,
-    ``OPERATION_*`` enum spellings, and the ``Data`` oneof as
-    ``{"rawData": <base64>}`` / ``{"structuredData": {...}}`` — see
-    :mod:`.protojson`. The pre-r6 test shorthand (utf-8 position,
-    lowercase op, ``{"raw": "<utf-8 text>"}`` / ``{"struct": {...}}``
-    arms) is still accepted for convenience.
-    """
-    from .protojson import is_proto_json_record, record_from_proto_json
-
-    if is_proto_json_record(msg):
-        return record_from_proto_json(msg)
-
-    def data(v: Any) -> bytes | dict | None:
-        if v is None:
-            return None
-        if "raw" in v:
-            return str(v["raw"]).encode("utf-8")
-        if "struct" in v:
-            return dict(v["struct"])
-        raise ValueError("record data must carry 'raw' or 'struct'")
-
-    payload = msg.get("payload") or {}
-    return Record(
-        position=str(msg.get("position", "")).encode("utf-8"),
-        operation=Operation(msg.get("operation", "unspecified")),
-        key=data(msg.get("key")),
-        payload_before=data(payload.get("before")),
-        payload_after=data(payload.get("after")),
-        metadata=dict(msg.get("metadata") or {}),
-    )
+    """Decode ``Destination.Run.Request.record``: the protobuf-JSON mapping
+    of ``opencdc.v1.Record`` (``opencdc.proto:52-97``) — base64
+    ``position``, ``OPERATION_*`` enum spellings, and the ``Data`` oneof as
+    ``{"rawData": <base64>}`` / ``{"structuredData": {...}}`` (see
+    :mod:`.protojson`). It is the only record shape: any other raises."""
+    return record_from_proto_json(msg)
 
 
 # ------------------------------------------------------------- streams ----

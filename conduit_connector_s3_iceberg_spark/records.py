@@ -2,16 +2,22 @@
 
 Re-expresses the reference's wire data model and per-record decode rules
 (``src/main/proto/opencdc.proto:38-97``, ``SparkDestinationStream.java:
-116-262``) with the same observable behavior:
+116-262``) with the same observable behavior. A ``Record`` arrives in one
+shape: the plugin wire decodes proto-JSON ``opencdc.v1.Record`` frames
+(:mod:`.plugin.protojson`), whose ``Data`` is raw JSON bytes or an
+already-decoded Struct (a ``dict``).
 
 * key decode keeps bool/number/string, drops null/missing, rejects nested
   values (``SparkDestinationStream.java:161-170``);
 * empty keys raise ``key has no fields`` (``:119-122``);
 * non-JSON key bytes raise ``input data is not JSON`` (``:180,184``);
-* protobuf-struct keys are stringified scalars (``:195-206``);
-* top-level exact-integral floats in payloads are rewritten to ints so
-  schema coercion into int columns succeeds (``:237-262``) — top-level
-  ONLY, matching the reference (nested values untouched).
+* Struct keys are stringified scalars (``:195-206``);
+* payloads are validated as JSON objects here; the exact-integral rule of
+  ``toJsonString`` (``:237-262``) is applied by the schema-conformed parse,
+  ``functions.codec.conform_payload``, which every write path shares. It
+  applies to integral columns only: a string column keeps a number
+  token's text (``987.0`` stays ``"987.0"``; the reference stores
+  ``"987"``).
 
 Divergence (deliberate, documented): composite keys AND all fields — the
 reference silently drops all but the first via jOOQ condition misuse
@@ -109,117 +115,6 @@ def struct_key_to_map(struct: dict[str, Any]) -> dict[str, str]:
     return out
 
 
-# --------------------------------------------------------------- Struct wire
-#
-# The reference receives keys/payloads as either raw JSON bytes or a
-# google.protobuf.Struct (``opencdc.proto:89-97``, the proto3 Data oneof).
-# ``Record`` has so far accepted the *decoded* dict form of a Struct; the
-# functions below also accept the serialized wire bytes. When the protobuf
-# runtime is importable we delegate to it; otherwise a pure-stdlib parser of
-# the (public, stable) proto3 wire format covers the three message shapes
-# Struct needs:
-#
-#   Struct   { map<string, Value> fields = 1; }          (len-delimited)
-#   Value    { oneof kind: null=1 number=2(double) string=3 bool=4
-#              struct=5 list=6 }
-#   ListValue{ repeated Value values = 1; }
-
-try:  # soft import — the container may not ship protobuf
-    from google.protobuf.struct_pb2 import Struct as _PbStruct  # type: ignore
-except Exception:  # pragma: no cover - environment-dependent
-    _PbStruct = None
-
-
-def _varint(buf: bytes, i: int) -> tuple[int, int]:
-    """Decode one base-128 varint at offset ``i`` → (value, next offset)."""
-    shift = out = 0
-    while True:
-        b = buf[i]
-        out |= (b & 0x7F) << shift
-        i += 1
-        if not b & 0x80:
-            return out, i
-        shift += 7
-
-
-def _wire_fields(buf: bytes):
-    """Iterate (field_number, wire_type, payload) over one message."""
-    i = 0
-    while i < len(buf):
-        tag, i = _varint(buf, i)
-        field, wtype = tag >> 3, tag & 0x07
-        if wtype == 0:  # varint
-            val, i = _varint(buf, i)
-            yield field, wtype, val
-        elif wtype == 1:  # fixed64
-            yield field, wtype, buf[i : i + 8]
-            i += 8
-        elif wtype == 2:  # length-delimited
-            ln, i = _varint(buf, i)
-            yield field, wtype, buf[i : i + ln]
-            i += ln
-        elif wtype == 5:  # fixed32
-            yield field, wtype, buf[i : i + 4]
-            i += 4
-        else:
-            raise ValueError(f"unsupported wire type {wtype}")
-
-
-def _parse_value(buf: bytes) -> Any:
-    """One ``google.protobuf.Value`` message → Python native."""
-    import struct as _struct
-
-    kind: Any = None
-    for field, _, payload in _wire_fields(buf):
-        if field == 1:  # null_value
-            kind = None
-        elif field == 2:  # number_value (little-endian double)
-            kind = _struct.unpack("<d", payload)[0]
-        elif field == 3:  # string_value
-            kind = payload.decode("utf-8")
-        elif field == 4:  # bool_value
-            kind = bool(payload)
-        elif field == 5:  # struct_value
-            kind = parse_struct_bytes(payload)
-        elif field == 6:  # list_value
-            kind = [
-                _parse_value(p)
-                for f, _, p in _wire_fields(payload)
-                if f == 1
-            ]
-    return kind
-
-
-def parse_struct_bytes(raw: bytes) -> dict[str, Any]:
-    """Serialized ``google.protobuf.Struct`` → plain dict (numbers are
-    doubles, exactly the decoded form the reference hands to
-    ``protobufStructToMap``, ``SparkDestinationStream.java:190-209``)."""
-    if _PbStruct is not None:  # pragma: no cover - environment-dependent
-        s = _PbStruct()
-        s.ParseFromString(bytes(raw))
-        from google.protobuf.json_format import MessageToDict  # type: ignore
-
-        return MessageToDict(s)
-    out: dict[str, Any] = {}
-    for field, _, entry in _wire_fields(bytes(raw)):
-        if field != 1:
-            continue  # unknown field — skip, proto3 contract
-        key, val = "", None
-        for ef, _, ep in _wire_fields(entry):
-            if ef == 1:
-                key = ep.decode("utf-8")
-            elif ef == 2:
-                val = _parse_value(ep)
-        out[key] = val
-    return out
-
-
-def struct_wire_key_to_map(raw: bytes) -> dict[str, str]:
-    """Struct wire bytes → stringified predicate map — the full reference
-    path ``structuredData → protobufStructToMap`` in one call."""
-    return struct_key_to_map(parse_struct_bytes(raw))
-
-
 def key_to_map(key: bytes | dict | None) -> dict[str, Any]:
     """Key ``Data`` → predicate map (``toPojoMap``,
     ``SparkDestinationStream.java:138-149``) + the empty-key guard that
@@ -236,26 +131,20 @@ def key_to_map(key: bytes | dict | None) -> dict[str, Any]:
 
 
 def normalize_payload_json(payload: bytes | dict | None) -> str:
-    """Payload ``Data`` → one JSON line ready for schema-conformed parsing
-    (``toJsonString``, ``SparkDestinationStream.java:237-262``).
-
-    Rewrites **top-level** exact-integral numbers (e.g. ``987.0`` → ``987``)
-    so the JSON reader can coerce them into int columns; nested values are
-    deliberately untouched (reference iterates top-level field names only,
-    ``:254``).
-    """
+    """Payload ``Data`` → one JSON object text for the schema-conformed
+    parse (``toJsonString``, ``SparkDestinationStream.java:237-262``): raw
+    bytes must be a JSON object and pass through as text; a decoded Struct
+    is serialized. Numbers are not rewritten here — the integral rule is
+    part of that parse (``functions.codec.conform_payload``)."""
     if payload is None:
         raise ValueError("record has no payload")
     if isinstance(payload, dict):
-        obj = dict(payload)
-    else:
-        try:
-            obj = json.loads(bytes(payload).decode("utf-8"))
-        except (json.JSONDecodeError, UnicodeDecodeError):
-            raise ValueError("input data is not JSON") from None
-        if not isinstance(obj, dict):
-            raise ValueError("input data is not JSON")
-    for name, value in obj.items():
-        if isinstance(value, float) and not isinstance(value, bool) and value.is_integer():
-            obj[name] = int(value)
-    return json.dumps(obj)
+        return json.dumps(payload)
+    try:
+        text = bytes(payload).decode("utf-8")
+        obj = json.loads(text)
+    except (json.JSONDecodeError, UnicodeDecodeError):
+        raise ValueError("input data is not JSON") from None
+    if not isinstance(obj, dict):
+        raise ValueError("input data is not JSON")
+    return text

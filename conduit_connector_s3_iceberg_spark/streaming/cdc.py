@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.codec import CDC_ENVELOPE, conform_payload, key_struct
+from ..functions.codec import CDC_ENVELOPE, conform_payload, key_struct, payload_error
 from ..operators.cdc_batch import last_write_wins
 from ..writer import OP_COL
 
@@ -59,13 +59,14 @@ def decode_cdc(
     position is opaque bytes (``opencdc.proto:54``) with no order contract,
     so we use the record's arrival order within the batch — monotonic ids
     assigned at decode."""
-    return envelope.select(
+    changes = envelope.select(
         "position",
         F.monotonically_increasing_id().alias("seq"),
         F.col("operation").alias("op"),
         key_struct("key", key_fields).alias("k"),
-        conform_payload("after", table_schema).alias("row"),
+        F.col("after").alias("row"),
     )
+    return conform_payload(changes, "row", table_schema)
 
 
 def collapse_lww(decoded: DataFrame, key_fields: list[str]) -> DataFrame:
@@ -128,7 +129,7 @@ KNOWN_OPS = ("unspecified", "create", "update", "delete", "snapshot")
 
 
 def classify_cdc_errors(
-    envelope: DataFrame, key_fields: list[str]
+    envelope: DataFrame, key_fields: list[str], table_schema: T.StructType
 ) -> DataFrame:
     """Envelope rows → envelope + ``__cdc_error`` verdict column (null =
     valid) — the record-granularity error contract of the reference
@@ -142,7 +143,9 @@ def classify_cdc_errors(
     key/payload bytes, ``"key has no fields"`` for absent/empty delete keys
     (the guard that prevents accidental full-table deletes,
     ``SparkDestinationStream.java:119-122``), ``"record has no payload"``
-    for upserts without an after-image. Every check is a column expression
+    for upserts without an after-image, and the payload rule's own reason
+    (``functions.codec.payload_error``) for an after-image that
+    :func:`decode_cdc` would refuse. Every check is a column expression
     (whole-stage codegen) — classification adds no Python to the hot path.
     """
     kmap = F.from_json("key", T.MapType(T.StringType(), T.StringType()))
@@ -179,14 +182,15 @@ def classify_cdc_errors(
                     F.lit(True),
                 ),
                 F.lit("key has no fields"),
-            ),
+            )
+            .otherwise(payload_error("after", table_schema)),
         )
     )
     return envelope.withColumn(ERROR_COL, err)
 
 
 def split_cdc_batch(
-    envelope: DataFrame, key_fields: list[str]
+    envelope: DataFrame, key_fields: list[str], table_schema: T.StructType
 ) -> tuple[DataFrame, DataFrame]:
     """Classify and split one envelope batch → ``(valid, dead_letter)``.
 
@@ -195,7 +199,7 @@ def split_cdc_batch(
     record ``(position, operation, error)`` — the durable analogue of the
     reference's per-record error response.
     """
-    classified = classify_cdc_errors(envelope, key_fields)
+    classified = classify_cdc_errors(envelope, key_fields, table_schema)
     valid = classified.filter(F.col(ERROR_COL).isNull()).drop(ERROR_COL)
     dlq = classified.filter(F.col(ERROR_COL).isNotNull()).select(
         "position", "operation", F.col(ERROR_COL).alias("error")
@@ -224,8 +228,8 @@ def apply_cdc_batch_dlq(
     same values); the DLQ append is NOT (each replay would stamp and
     append the same quarantined rows again), so the stream path passes a
     per-epoch commit ``mark`` to make it exactly-once."""
-    valid, dlq = split_cdc_batch(envelope_batch, key_fields)
     schema = wh.schema(table)
+    valid, dlq = split_cdc_batch(envelope_batch, key_fields, schema)
     decoded = decode_cdc(valid, schema, key_fields)
     apply_cdc_batch(wh, table, decoded, key_fields)
     n_bad = dlq.count()

@@ -40,14 +40,14 @@ def cdc_delta_frame(envelope: DataFrame, table_schema: T.StructType) -> DataFram
     AND ``−1 before``; delete contributes ``−1 before``. All column
     expressions (codegen) — no Python in the path.
     """
-    after = conform_payload("after", table_schema)
-    before = conform_payload("before", table_schema)
     arrivals = envelope.filter(F.col("operation").isin(*UPSERT_OPS)).select(
-        F.lit(1).alias(SIGN_COL), after.alias("__row")
+        F.lit(1).alias(SIGN_COL), F.col("after").alias("__row")
     )
     departures = envelope.filter(
         F.col("operation").isin("update", "delete")
-    ).select(F.lit(-1).alias(SIGN_COL), before.alias("__row"))
+    ).select(F.lit(-1).alias(SIGN_COL), F.col("before").alias("__row"))
+    arrivals = conform_payload(arrivals, "__row", table_schema)
+    departures = conform_payload(departures, "__row", table_schema)
     return arrivals.unionByName(departures).select(SIGN_COL, "__row.*")
 
 

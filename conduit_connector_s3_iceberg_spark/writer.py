@@ -3,8 +3,10 @@
 Re-expresses the reference's data plane (``SparkDestinationStream.java:
 94-235``) Spark-first:
 
-* **insert** — fetch the target table schema (``:216``), parse the payload
-  JSON against it with FAILFAST (``:221-227``), append (``:229-232``).
+* **insert** — fetch the target table schema (``:216``), conform the
+  payload JSON to it with FAILFAST and the exact-integral rule
+  (``:221-262``, ``functions.codec.conform_payload``), append
+  (``:229-232``).
 * **delete** — key map → conjunctive equality predicate; ALL key fields are
   ANDed (fixing the reference's composite-key bug at ``:126-132``); values
   are bound as typed literals, not string-spliced (the reference inlines
@@ -63,6 +65,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .functions.codec import conform_payload
 from .records import (
     Operation,
     Record,
@@ -732,18 +735,20 @@ class ParquetWarehouse:
         manifests while shared data files stay referenced."""
         keep_last = max(keep_last, 1)
         hist = self.history(table)
+        # a rollback adds a LOG line naming an existing snapshot: rank the
+        # distinct snapshots by their latest line
+        snapshots = list(dict.fromkeys(reversed(hist)))[::-1]
         current = os.path.basename(self._current_path(table))
-        keep = set(hist[-keep_last:]) | {current} | set(self.tags(table).values())
-        removed = [n for n in hist if n not in keep]
+        keep = set(snapshots[-keep_last:]) | {current} | set(self.tags(table).values())
+        removed = [n for n in snapshots if n not in keep]
         for name in removed:
             shutil.rmtree(os.path.join(self._dir(table), name), ignore_errors=True)
-        kept = [n for n in hist if n in keep]
         log = os.path.join(self._dir(table), "LOG")
         tmp = log + ".tmp"
         with open(tmp, "w") as fh:
-            fh.write("".join(n + "\n" for n in kept))
+            fh.write("".join(n + "\n" for n in hist if n in keep))
         os.replace(tmp, log)
-        return {"expired": len(removed), "kept": len(kept)}
+        return {"expired": len(removed), "kept": len(snapshots) - len(removed)}
 
     # -- schema evolution (Iceberg `ALTER TABLE ... ADD/DROP/RENAME COLUMN`)
     def add_column(
@@ -926,18 +931,17 @@ class CdcWriter:
         self._group: WriteGroup | None = None
 
     # -- helpers ------------------------------------------------------------
-    def _row(self) -> F.Column:
-        """Schema-conformed FAILFAST parse of the ``value`` column's
-        normalized payload JSON against the target table's schema
-        (reference ``:216,221-227``), as the ``row`` struct."""
-        schema = self.wh.schema(self.table)
-        return F.from_json("value", schema, {"mode": "FAILFAST"}).alias("row")
+    def _row(self, frame: DataFrame) -> DataFrame:
+        """``frame`` with its ``row`` payload JSON conformed to the target
+        table's schema (reference ``:216,221-227``) by the one payload rule,
+        ``functions.codec.conform_payload``."""
+        return conform_payload(frame, "row", self.wh.schema(self.table))
 
     def _payload_df(self, payloads: list[str]) -> DataFrame:
         """The payloads as table rows (:meth:`_row`). One partition: a run's
         rows land as one data file."""
-        frame = arrow_frame(self.spark, {"value": payloads}).coalesce(1)
-        return frame.select(self._row()).select("row.*")
+        frame = arrow_frame(self.spark, {"row": payloads}).coalesce(1)
+        return self._row(frame).select("row.*")
 
     # -- per-record operations (reference dispatch, ``:94-108``) ------------
     def batch(self, on_landed=None) -> WriteGroup:
@@ -1004,7 +1008,7 @@ class CdcWriter:
 
         The records become the epoch path's decoded change frame
         ``(position, seq, op, k, row)`` — ``seq`` is the list order, ``row``
-        the FAILFAST payload parse — and go through
+        the conformed payload (:meth:`_row`) — and go through
         ``streaming.cdc.apply_cdc_batch``: one collapse, one
         ``merge_apply``, one commit. A payload that does not conform fails
         the batch before anything commits.
@@ -1023,13 +1027,13 @@ class CdcWriter:
                 if r.key or r.operation == Operation.DELETE else {}
                 for r in live
             ], pa.struct([(k, pa.string()) for k in key_fields])),
-            "value": [
+            "row": [
                 None if r.operation == Operation.DELETE
                 else normalize_payload_json(r.payload_after)
                 for r in live
             ],
         })
-        decoded = frame.select("position", "seq", "op", "k", self._row())
+        decoded = self._row(frame)
         cdc.apply_cdc_batch(self.wh, self.table, decoded, key_fields)
 
 

@@ -28,8 +28,15 @@ from conduit_connector_s3_iceberg_spark.plugin import (  # noqa: E402
     DestinationService,
     PluginServer,
 )
+from conduit_connector_s3_iceberg_spark.plugin.protojson import (  # noqa: E402
+    record_to_proto_json,
+)
 from conduit_connector_s3_iceberg_spark.plugin.server import (  # noqa: E402
     handshake_line,
+)
+from conduit_connector_s3_iceberg_spark.records import (  # noqa: E402
+    Operation,
+    Record,
 )
 from conduit_connector_s3_iceberg_spark.session import build_session  # noqa: E402
 from conduit_connector_s3_iceberg_spark.writer import (  # noqa: E402
@@ -55,16 +62,17 @@ CONFIG = {
     "s3.region": "us-east-1",
 }
 
+# Each record is sent as its proto-JSON ``opencdc.v1.Record``: base64
+# position and rawData, OPERATION_* spellings, structuredData objects.
 RECORDS = [
-    {"position": "p-1", "operation": "create",
-     "payload": {"after": {"raw": '{"id": 1, "name": "ada", "score": 9.5}'}}},
-    {"position": "p-2", "operation": "create",
-     "payload": {"after": {"struct": {"id": 2, "name": "bo", "score": 7.0}}}},
-    {"position": "p-3", "operation": "update",
-     "key": {"raw": '{"id": 2}'},
-     "payload": {"after": {"raw": '{"id": 2, "name": "bo2", "score": 8.0}'}}},
-    {"position": "p-4", "operation": "delete",
-     "key": {"struct": {"id": "1"}}},  # stringified struct key, cast to int
+    Record(b"p-1", Operation.CREATE,
+           payload_after=b'{"id": 1, "name": "ada", "score": 9.5}'),
+    Record(b"p-2", Operation.CREATE,
+           payload_after={"id": 2, "name": "bo", "score": 7.0}),
+    Record(b"p-3", Operation.UPDATE, key=b'{"id": 2}',
+           payload_after=b'{"id": 2, "name": "bo2", "score": 8.0}'),
+    # stringified struct key, cast to the int column
+    Record(b"p-4", Operation.DELETE, key={"id": "1"}),
 ]
 
 
@@ -85,11 +93,10 @@ def main() -> int:
     sock = socket.create_connection(("localhost", server.port), timeout=60)
     rfile = sock.makefile("rb")
 
-    def call(obj):
+    def call(obj, label=None):
         sock.sendall((json.dumps(obj) + "\n").encode())
         resp = json.loads(rfile.readline())
-        print(f"  -> {obj.get('rpc') or 'record ' + obj['record']['position']}:"
-              f" {resp}")
+        print(f"  -> {label or obj['rpc']}: {resp}")
         return resp
 
     print("\n[host] specify / configure / start")
@@ -100,7 +107,8 @@ def main() -> int:
     print("\n[host] run stream — each record acked by position")
     call({"rpc": "run"})
     for rec in RECORDS:
-        call({"record": rec})
+        call({"record": record_to_proto_json(rec)},
+             f"record {rec.position.decode()}")
     sock.sendall(b'{"end": true}\n')
 
     print("\n[host] stop / teardown")

@@ -29,7 +29,6 @@ from conduit_connector_s3_iceberg_spark.plugin.service import (
     StartRequest,
     StopRequest,
     TeardownRequest,
-    record_from_wire,
 )
 from conduit_connector_s3_iceberg_spark.records import Operation, Record
 from conduit_connector_s3_iceberg_spark.session import REQUIRED_KEYS
@@ -265,26 +264,6 @@ def test_teardown_without_start_is_ok(service):
     svc, _ = service
     obs = unary(svc.teardown, TeardownRequest())
     assert obs.completed and not obs.errors
-
-
-# ------------------------------------------------------------ wire decode --
-
-
-def test_record_from_wire_raw_and_struct():
-    r = record_from_wire(
-        {
-            "position": "p-9",
-            "operation": "create",
-            "key": {"raw": '{"id": 1}'},
-            "payload": {"after": {"struct": {"id": 1, "name": "x"}}},
-            "metadata": {"source": "t"},
-        }
-    )
-    assert r.position == b"p-9"
-    assert r.operation is Operation.CREATE
-    assert r.key == b'{"id": 1}'
-    assert r.payload_after == {"id": 1, "name": "x"}
-    assert r.metadata == {"source": "t"}
 
 
 # ---------------------------------------------------------------- server ---
@@ -568,6 +547,30 @@ def test_server_group_failfast_acks_prefix_and_drops_rest(service):
         assert c.call({"rpc": "stop"}) == {"ok": True, "response": {}}
         got = sorted(r.string_field for r in wh.read("plugin_t").collect())
         assert got == ["a", "b"]
+        c.close()
+    finally:
+        server.stop()
+
+
+def test_server_refuses_legacy_record_shape(service):
+    """A record frame in the pre-proto-JSON shorthand (UTF-8 position,
+    lowercase op, raw arm) gets one error, commits nothing and closes the
+    stream; a Stop whose lastPosition is not base64 is refused too."""
+    svc, wh = service
+    server, c = _open_run(svc)
+    try:
+        commits = len(wh.history("plugin_t"))
+        c.send({"record": {"position": "l-1", "operation": "create",
+                           "payload": {"after": {"raw": _row("a", 1)}}}})
+        err = c.recv()["error"]
+        assert err["code"] == "INTERNAL"
+        assert svc.run_stream.closed
+        bad_stop = c.call({"rpc": "stop", "request": {"lastPosition": "l-1"}})
+        assert bad_stop["error"]["description"].startswith("couldn't stop: ")
+        # nothing else was sent: the next line answers the stop call
+        assert c.call({"rpc": "stop"}) == {"ok": True, "response": {}}
+        assert len(wh.history("plugin_t")) == commits
+        assert wh.read("plugin_t").count() == 0
         c.close()
     finally:
         server.stop()

@@ -1,4 +1,5 @@
-"""Decode-layer unit tests: the reference's key/payload error taxonomy.
+"""Decode-layer unit tests: the reference's key/payload error taxonomy,
+and the payload integral rule as ``conform_payload`` applies it.
 
 Table-driven from ``SparkDestinationStreamIT.java:185-258`` and
 ``SparkDestinationStream.java:138-262`` (see FIXTURES.md §2).
@@ -7,7 +8,9 @@ Table-driven from ``SparkDestinationStreamIT.java:185-258`` and
 import json
 
 import pytest
+from pyspark.sql import types as T
 
+from conduit_connector_s3_iceberg_spark.functions.codec import conform_payload
 from conduit_connector_s3_iceberg_spark.records import (
     KeyError_,
     json_key_to_map,
@@ -15,6 +18,7 @@ from conduit_connector_s3_iceberg_spark.records import (
     normalize_payload_json,
     struct_key_to_map,
 )
+from conduit_connector_s3_iceberg_spark.writer import arrow_frame
 
 
 class TestKeyDecode:
@@ -52,26 +56,47 @@ class TestKeyDecode:
             struct_key_to_map({"a": {"nested": 1}})
 
 
+def _conform(spark, schema, *payloads):
+    """Payload texts through the one payload rule, as collected rows."""
+    frame = arrow_frame(spark, {"value": list(payloads)})
+    return conform_payload(frame, "value", schema).select("value.*").collect()
+
+
 class TestPayloadNormalization:
-    def test_top_level_integral_floats_become_ints(self):
-        out = json.loads(normalize_payload_json(b'{"a": 987.0, "b": 1.5}'))
-        assert out == {"a": 987, "b": 1.5}
-        assert isinstance(out["a"], int)
+    def test_top_level_integral_floats_become_ints(self, spark):
+        schema = T.StructType([T.StructField("a", T.LongType()),
+                               T.StructField("b", T.DoubleType())])
+        [row] = _conform(spark, schema, normalize_payload_json(b'{"a": 987.0, "b": 1.5}'))
+        assert row.asDict() == {"a": 987, "b": 1.5}
+        assert isinstance(row["a"], int)
 
-    def test_nested_values_untouched(self):
+    def test_nested_values_untouched(self, spark):
         # reference rewrites top-level only (SparkDestinationStream.java:254)
-        out = json.loads(
-            normalize_payload_json(b'{"arr": [1.0, 2.5], "m": {"x": 3.0}}')
-        )
-        assert out == {"arr": [1.0, 2.5], "m": {"x": 3.0}}
+        payload = '{"arr": [1.0, 2.5], "m": {"x": 3.0}}'
+        doubles = T.StructType([
+            T.StructField("arr", T.ArrayType(T.DoubleType())),
+            T.StructField("m", T.StructType([T.StructField("x", T.DoubleType())])),
+        ])
+        [row] = _conform(spark, doubles, payload)
+        assert row["arr"] == [1.0, 2.5] and row["m"]["x"] == 3.0
+        longs = T.StructType([
+            T.StructField("m", T.StructType([T.StructField("x", T.LongType())])),
+        ])
+        with pytest.raises(Exception):
+            _conform(spark, longs, payload)
 
-    def test_bool_not_treated_as_number(self):
-        out = json.loads(normalize_payload_json(b'{"flag": true}'))
-        assert out == {"flag": True}
+    def test_bool_not_treated_as_number(self, spark):
+        flag = T.StructType([T.StructField("flag", T.BooleanType())])
+        assert _conform(spark, flag, '{"flag": true}')[0]["flag"] is True
+        as_int = T.StructType([T.StructField("flag", T.IntegerType())])
+        with pytest.raises(Exception):
+            _conform(spark, as_int, '{"flag": true}')
 
-    def test_dict_payload_accepted(self):
-        out = json.loads(normalize_payload_json({"a": 2.0}))
-        assert out == {"a": 2}
+    def test_dict_payload_accepted(self, spark):
+        text = normalize_payload_json({"a": 2.0})
+        assert json.loads(text) == {"a": 2.0}
+        schema = T.StructType([T.StructField("a", T.IntegerType())])
+        assert _conform(spark, schema, text)[0]["a"] == 2
 
     def test_non_json_payload_rejected(self):
         with pytest.raises(ValueError, match="input data is not JSON"):
@@ -80,108 +105,3 @@ class TestPayloadNormalization:
     def test_missing_payload_rejected(self):
         with pytest.raises(ValueError, match="record has no payload"):
             normalize_payload_json(None)
-
-
-# ----------------------------------------------------------- Struct wire form
-#
-# The reference's structured-data path (opencdc.proto:89-97 → google.protobuf
-# .Struct → protobufStructToMap). The test-side encoder below writes the
-# proto3 wire format from the published spec, independently of the decoder
-# under test; a hand-derived byte vector pins the format itself.
-
-import struct as _struct
-
-from hypothesis import given
-from hypothesis import strategies as st
-
-from conduit_connector_s3_iceberg_spark.records import (
-    parse_struct_bytes,
-    struct_wire_key_to_map,
-)
-
-
-def _enc_varint(n: int) -> bytes:
-    out = b""
-    while True:
-        b7 = n & 0x7F
-        n >>= 7
-        out += bytes([b7 | (0x80 if n else 0)])
-        if not n:
-            return out
-
-
-def _enc_ld(field: int, payload: bytes) -> bytes:  # length-delimited
-    return _enc_varint((field << 3) | 2) + _enc_varint(len(payload)) + payload
-
-
-def _enc_value(v) -> bytes:
-    if v is None:
-        return _enc_varint((1 << 3) | 0) + _enc_varint(0)
-    if isinstance(v, bool):
-        return _enc_varint((4 << 3) | 0) + _enc_varint(int(v))
-    if isinstance(v, float):
-        return _enc_varint((2 << 3) | 1) + _struct.pack("<d", v)
-    if isinstance(v, str):
-        return _enc_ld(3, v.encode("utf-8"))
-    if isinstance(v, dict):
-        return _enc_ld(5, _enc_struct(v))
-    if isinstance(v, list):
-        return _enc_ld(6, b"".join(_enc_ld(1, _enc_value(x)) for x in v))
-    raise TypeError(type(v))
-
-
-def _enc_struct(d: dict) -> bytes:
-    return b"".join(
-        _enc_ld(1, _enc_ld(1, k.encode("utf-8")) + _enc_ld(2, _enc_value(v)))
-        for k, v in d.items()
-    )
-
-
-class TestStructWireDecode:
-    def test_known_byte_vector(self):
-        # {"a": 1.0} by hand: fields-entry (field 1, len 14) = key "a"
-        # (0x0A 0x01 0x61) + value (field 2, len 9) = Value{number_value}
-        # (0x11 + LE double)
-        raw = bytes(
-            [0x0A, 0x0E, 0x0A, 0x01, 0x61, 0x12, 0x09, 0x11]
-        ) + _struct.pack("<d", 1.0)
-        assert parse_struct_bytes(raw) == {"a": 1.0}
-        # and it must agree with the independent test-side encoder
-        assert _enc_struct({"a": 1.0}) == raw
-
-    def test_scalars_roundtrip_to_stringified_map(self):
-        wire = _enc_struct({"integer_field": 12.0, "s": "x", "b": True})
-        assert struct_wire_key_to_map(wire) == {
-            "integer_field": "12",
-            "s": "x",
-            "b": "true",
-        }
-
-    def test_nested_and_list_values_decode(self):
-        wire = _enc_struct({"m": {"x": 1.5}, "l": ["a", 2.0, None]})
-        assert parse_struct_bytes(wire) == {"m": {"x": 1.5}, "l": ["a", 2.0, None]}
-
-    @given(
-        st.dictionaries(
-            st.text(min_size=1, max_size=8),
-            st.one_of(
-                st.floats(allow_nan=False, allow_infinity=False),
-                st.text(max_size=12),
-                st.booleans(),
-            ),
-            max_size=6,
-        )
-    )
-    def test_wire_decode_matches_dict_path(self, d):
-        # property: Struct bytes → SAME predicate map as the decoded-dict
-        # path (SparkDestinationStream.java:195-206 stringified scalars)
-        from conduit_connector_s3_iceberg_spark.records import struct_key_to_map
-
-        assert parse_struct_bytes(_enc_struct(d)) == d
-        try:
-            expected = struct_key_to_map(d)
-        except Exception as e:
-            with pytest.raises(type(e)):
-                struct_wire_key_to_map(_enc_struct(d))
-            return
-        assert struct_wire_key_to_map(_enc_struct(d)) == expected

@@ -140,6 +140,22 @@ def test_expire_snapshots_keeps_current_readable(spark, tmp_path):
     assert wh.read("t", -2).count() == 2
 
 
+def test_expire_snapshots_counts_distinct_snapshots_after_rollback(spark, tmp_path):
+    """A rollback to the current snapshot adds a second LOG line naming it;
+    ``keep_last`` and the counts are in distinct snapshots."""
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    wh.create_table("t", SCHEMA)
+    for i in range(3):
+        wh.append("t", spark.createDataFrame([(i, "r")], SCHEMA))
+    current = wh.history("t")[-1]
+    wh.rollback("t", current)
+    assert wh.history("t")[-2:] == [current, current]
+    assert wh.expire_snapshots("t", keep_last=2) == {"expired": 2, "kept": 2}
+    assert len(set(wh.history("t"))) == 2
+    assert wh.read("t", wh.history("t")[0]).count() == 2
+    assert wh.read("t").count() == 3
+
+
 PART_SCHEMA = T.StructType(
     [
         T.StructField("id", T.IntegerType()),

@@ -124,8 +124,9 @@ def test_cdc_stream_apply_end_to_end(spark, tmp_path):
 def test_cdc_stream_dead_letter_quarantine(spark, tmp_path):
     # reference error contract (SparkDestinationStream.java:70-92): a bad
     # record fails ALONE; the rest of the batch commits. One malformed
-    # payload + one keyless delete quarantine to the DLQ table while the
-    # other records apply.
+    # payload, one keyless delete and two payloads that do not conform to
+    # the table schema quarantine to the DLQ table while the other records
+    # apply.
     wh = ParquetWarehouse(spark, str(tmp_path / "warehouse"))
     wh.create_table("items", TABLE_SCHEMA)
     records = [
@@ -141,6 +142,8 @@ def test_cdc_stream_dead_letter_quarantine(spark, tmp_path):
         env("p3", "delete"),  # keyless delete — "key has no fields"
         env("p4", "create", after={"id": 2, "name": "b", "qty": 7}),
         env("p5", "unspecified"),  # still a silent no-op, NOT an error
+        env("p6", "create", after={"id": 3, "name": "c", "qty": 12.5}),
+        env("p7", "create", after={"id": 4, "name": "d", "qty": "7"}),
     ]
     src = tmp_path / "cdc_in"
     src.mkdir()
@@ -162,6 +165,8 @@ def test_cdc_stream_dead_letter_quarantine(spark, tmp_path):
     assert dlq == {
         "p2": "input data is not JSON",
         "p3": "key has no fields",
+        "p6": "field 'qty' does not conform to int",
+        "p7": "payload does not conform to the table schema",
     }
 
 

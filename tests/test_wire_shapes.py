@@ -254,22 +254,37 @@ def test_strict_proto_json_with_omitted_defaults_routes_to_proto_decoder():
     # Canonical protojson marshalers (protojson.Marshal in a Go host) OMIT
     # default-valued fields: a record with operation OPERATION_UNSPECIFIED
     # and no Data arms serializes as just {"position": "<b64>"}. That frame
-    # must still take the proto-JSON path (base64 position), not fall to
-    # the legacy decoder which would keep the base64 text as literal bytes.
+    # decodes with the proto defaults and a base64 position.
     r = record_from_wire({"position": b64(b"\x00\x01pos")})
     assert r.position == b"\x00\x01pos"
     assert r.operation is Operation.UNSPECIFIED
-    # legacy markers still select the legacy path
-    legacy = record_from_wire(
-        {"position": "pos1", "operation": "create",
-         "payload": {"after": {"raw": '{"a": 1}'}}}
-    )
-    assert legacy.position == b"pos1"
-    assert legacy.payload_after == b'{"a": 1}'
-    # a lowercase op alone (no arms) is also legacy
-    low = record_from_wire({"position": "pos2", "operation": "delete"})
-    assert low.position == b"pos2"
-    assert low.operation is Operation.DELETE
+    # the pre-proto-JSON shorthand (lowercase op, raw/struct arms) is refused
+    with pytest.raises(ValueError, match="unknown operation: create"):
+        record_from_wire(
+            {"position": "pos1", "operation": "create",
+             "payload": {"after": {"raw": '{"a": 1}'}}}
+        )
+    with pytest.raises(ValueError, match="neither rawData nor structuredData"):
+        record_from_wire({"position": b64(b"p"), "operation": "OPERATION_CREATE",
+                          "payload": {"after": {"struct": {"a": 1}}}})
+    with pytest.raises(ValueError, match="unknown operation: delete"):
+        record_from_wire({"position": b64(b"p"), "operation": "delete"})
+
+
+@pytest.mark.parametrize(
+    "msg",
+    [
+        {"position": "w-1"},  # UTF-8 text, not base64
+        {"position": b64(b"p") + "!"},
+        {"position": b64(b"p"), "operation": "OPERATION_CREATE",
+         "payload": {"after": {"rawData": "{not base64}"}}},
+        {"position": b64(b"p"), "operation": "OPERATION_DELETE",
+         "key": {"rawData": "e30=\n"}},
+    ],
+)
+def test_bytes_fields_decode_as_strict_base64(msg):
+    with pytest.raises(ValueError):
+        record_from_wire(msg)
 
 
 def test_data_oneof_exclusive():
