@@ -8,7 +8,10 @@ time on the driver, as the reference does in ``SparkDestinationStream.java:
 expressions over a DataFrame of raw envelope rows. The rules:
 
 * payload JSON is parsed against the target table schema; what a FAILFAST
-  parse refuses fails the job (``SparkDestinationStream.java:221-227``);
+  parse refuses fails the job (``SparkDestinationStream.java:221-227``),
+  or, for a caller that reports refusals per record (the epoch decode),
+  leaves its reason in a column; a payload that is not a JSON object is
+  ``input data is not JSON`` (``:175-188``);
 * a top-level integral column takes an integer token exactly and an
   exact-integral float (``987.0``, ``1e2``) as an int (``:237-262``); a
   fractional, quoted, boolean or out-of-range value is refused; nested
@@ -45,6 +48,9 @@ CDC_ENVELOPE = T.StructType(
     ]
 )
 
+#: a JSON object read as a map of its fields' text (null if it is not one)
+JSON_MAP = T.MapType(T.StringType(), T.StringType())
+
 #: bit width of each integral column type
 _INTEGRALS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
 
@@ -78,16 +84,27 @@ def _parses(json_col: Column | str, schema: T.StructType) -> tuple[Column, Colum
     )
 
 
-def _conformed(exact: Column, wide: Column, schema: T.StructType) -> tuple[Column, Column]:
-    """``(row, error)`` over the two parses: the row struct with the table's
-    field types, and the reason the payload is refused (null if it is not).
+def _conformed(
+    raw: Column, exact: Column, wide: Column, schema: T.StructType
+) -> tuple[Column, Column]:
+    """``(row, error)`` over the raw payload and its two parses: the row
+    struct with the table's field types (null where the payload is null),
+    and the reason the payload is refused (null if it is not).
 
     A top-level integral value is taken when its exact reading lies in the
     column's range and equals its double reading: ``987.0`` and ``1e2`` are
     ints, ``12.5``, ``1e-30`` and ``2**63`` in a bigint column are refused
     (``SparkDestinationStream.java:237-262``). Nested values are untouched.
+    A payload the widened parse cannot read is ``input data is not JSON``
+    when it is not a JSON object at all (``:175-188``); that third read
+    runs only on payloads already refused.
     """
-    errors = [F.when(wide[_CORRUPT].isNotNull(), F.lit("payload does not conform to the table schema"))]
+    unread = raw.isNotNull() & (wide.isNull() | wide[_CORRUPT].isNotNull())
+    # json_object_keys is null unless the text is a JSON object, and unlike
+    # from_json it compiles into the projection's generated code
+    not_json = F.when(F.json_object_keys(raw).isNull(), F.lit("input data is not JSON"))
+    nonconforming = F.lit("payload does not conform to the table schema")
+    errors = [F.when(unread, F.coalesce(not_json, nonconforming))]
     fields = []
     for f in schema.fields:
         value, bits = wide[f.name], _bits(f.dataType)
@@ -100,45 +117,52 @@ def _conformed(exact: Column, wide: Column, schema: T.StructType) -> tuple[Colum
                     F.lit(f"field {f.name!r} does not conform to {f.dataType.simpleString()}"),
                 )
             )
-            value = e.cast(f.dataType)
+            value = e.try_cast(f.dataType)  # a refused value reads as null when reported
         fields.append(value.alias(f.name))
-    return F.struct(*fields), F.coalesce(*errors)
+    return F.when(raw.isNotNull(), F.struct(*fields)), F.coalesce(*errors)
+
+
+def refuse(col: Column, error: Column) -> Column:
+    """``col``, failing the job with ``error`` wherever that is set."""
+    return F.when(error.isNull(), col).otherwise(F.raise_error(error))
 
 
 @functools.lru_cache(maxsize=64)
-def _bound_rule(json_col: str, schema: T.StructType) -> tuple[Column, Column, Column]:
-    """The two parses and the conformed struct that reads them — built once
-    per payload column and schema: every Column call is a JVM round trip,
-    and the wire path conforms one small frame per commit."""
+def _bound_rule(
+    json_col: str, schema: T.StructType, error_col: str | None
+) -> tuple[Column, ...]:
+    """The two parses and the output columns that read them — built once
+    per payload column, schema and mode: every Column call is a JVM round
+    trip, and the wire path conforms one small frame per commit."""
     exact, wide = _parses(json_col, schema)
-    row, error = _conformed(F.col(_EXACT), F.col(_WIDE), schema)
-    conformed = F.when(error.isNull(), row).otherwise(F.raise_error(error))
-    return exact.alias(_EXACT), wide.alias(_WIDE), conformed.alias(json_col)
+    row, error = _conformed(F.col(json_col), F.col(_EXACT), F.col(_WIDE), schema)
+    if error_col is None:
+        return exact.alias(_EXACT), wide.alias(_WIDE), refuse(row, error).alias(json_col)
+    return exact.alias(_EXACT), wide.alias(_WIDE), row.alias(json_col), error.alias(error_col)
 
 
-def conform_payload(frame: DataFrame, json_col: str, schema: T.StructType) -> DataFrame:
+def conform_payload(
+    frame: DataFrame, json_col: str, schema: T.StructType, error_col: str | None = None
+) -> DataFrame:
     """``frame`` with its payload-JSON column ``json_col`` replaced by a
     struct column of the same name, conformed to the target table schema
-    (:func:`_conformed`). A payload that does not conform fails the job.
+    (:func:`_conformed`). A payload that does not conform fails the job;
+    with ``error_col`` set, its reason lands in that column instead (null
+    where the payload conforms), appended after ``frame``'s columns.
 
     Each parse is bound once, as a column of an inner projection that the
     outer one reads its fields from: Spark does not inline a ``from_json``
     that is read more than once, so the plan holds two parses however many
     fields the table has."""
-    exact, wide, conformed = _bound_rule(json_col, schema)
-    bound = frame.select(*[c for c in frame.columns if c != json_col], exact, wide)
-    return bound.select(*[conformed if c == json_col else F.col(c) for c in frame.columns])
+    exact, wide, row, *error = _bound_rule(json_col, schema, error_col)
+    bound = frame.select(*frame.columns, exact, wide)
+    return bound.select(*[row if c == json_col else F.col(c) for c in frame.columns], *error)
 
 
-def payload_error(json_col: Column | str, schema: T.StructType) -> Column:
-    """Why :func:`conform_payload` would refuse the payload in ``json_col``,
-    or null where it takes it — the same rule as a verdict column."""
-    return _conformed(*_parses(json_col, schema), schema)[1]
-
-
-def key_struct(key_col: Column | str, key_fields: list[str]) -> Column:
-    """Key-JSON column → struct of (string-typed) key fields; values match
-    typed columns through implicit casts — the columnar form of the
-    reference's stringified struct keys (``:195-206``)."""
-    kmap = F.from_json(key_col, T.MapType(T.StringType(), T.StringType()))
+def key_struct(kmap: Column, key_fields: list[str]) -> Column:
+    """Parsed key map (``from_json`` of the key against :data:`JSON_MAP`)
+    → struct of (string-typed) key fields; values match typed columns
+    through implicit casts — the columnar form of the reference's
+    stringified struct keys (``:195-206``). A null-valued field reads as
+    absent, as ``json_key_to_map`` drops it (``:164-165``)."""
     return F.struct(*[kmap[k].alias(k) for k in key_fields])

@@ -464,7 +464,7 @@ def apply_cms_epoch(
     if not wh.table_exists(register_table):
         fresh = d.select("hrow", "bucket", F.col("d_cnt").alias("cnt"))
         wh.create_table(register_table, fresh.schema)
-        wh.append(register_table, fresh)
+        wh.append(register_table, fresh, mark=f"e{epoch_id}")
         mark_epoch_applied(wh, epoch_table, batch.sparkSession, epoch_id)
         return
     current = wh.read(register_table)
@@ -476,7 +476,7 @@ def apply_cms_epoch(
             + F.coalesce(F.col("d_cnt"), F.lit(0))
         ).alias("cnt"),
     )
-    wh.overwrite_with(register_table, merged)
+    wh.overwrite_with(register_table, merged, mark=f"e{epoch_id}")
     mark_epoch_applied(wh, epoch_table, batch.sparkSession, epoch_id)
 
 
@@ -502,10 +502,10 @@ def maintain_cms_stream(
     it. The last applied ``epoch_id`` is persisted in a one-row sidecar
     table and epochs ``<=`` it are skipped, making the merge idempotent
     (epoch ids are monotonically increasing per checkpoint, so the single
-    watermark row suffices). In the Parquet analogue the register overwrite
-    and the watermark are two commits — a crash exactly between them can
-    still double-count that one epoch; on a transactional store (Iceberg)
-    both writes share one MERGE transaction and the guarantee is exact.
+    watermark row suffices). In the Parquet analogue the register write and
+    the watermark are two commits; the register write carries the epoch's
+    commit mark (``e<epoch_id>``), so a replay after a crash between them
+    skips the register and only advances the watermark.
     """
     writer = (
         stream.writeStream.foreachBatch(

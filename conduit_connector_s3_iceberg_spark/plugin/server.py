@@ -212,9 +212,11 @@ class _Handler(socketserver.StreamRequestHandler):
                                 RunRequest(record=record_from_wire(msg["record"]))
                             )
                         except Exception as e:
+                            # a record that does not decode fails as a
+                            # record, after the records ahead of it
                             run_stream = self._flush(run_stream, group)
                             if run_stream is not None:
-                                run_stream.on_error(e)
+                                run_stream.fail_record(e)
                             run_stream = None
                         continue
                     run_stream = self._flush(run_stream, group)

@@ -224,13 +224,17 @@ class DestinationStream:
         for record in records[group.landed :]:
             try:
                 self.writer.write(record)
-            except Exception as e:  # reference :76-84 — any cause, one prefix
-                self.closed = True
-                self.response_observer.on_error(
-                    ServiceError(f"couldn't write record: {e}")
-                )
+            except Exception as e:
+                self.fail_record(e)
                 return
             self._ack(record)
+
+    def fail_record(self, cause: Exception) -> None:
+        """A record could not be written: the reference's single
+        ``couldn't write record: <cause>`` error (``:76-84``, any cause,
+        one prefix), which closes the stream."""
+        self.closed = True
+        self.response_observer.on_error(ServiceError(f"couldn't write record: {cause}"))
 
     def _ack(self, record: Record) -> None:
         self.response_observer.on_next(RunResponse(ack_position=record.position))

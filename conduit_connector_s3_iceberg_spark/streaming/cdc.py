@@ -13,6 +13,14 @@ Acking: the reference acks per record (``:87-92``); here the checkpoint
 commit of each epoch acks the whole micro-batch — same at-least-once
 contract, amortized over 10^6 records instead of 1.
 
+Errors: the reference checks each record before applying it and fails a
+bad record alone (``:70-92``). Here :func:`decode_cdc` gives every record
+one verdict, the reason it is refused or null, from the parses the decode
+binds anyway. The default apply is FAILFAST: a refused record fails the
+epoch with that reason and nothing commits. The dead-letter mode
+(:func:`apply_cdc_batch_dlq`) quarantines each refused record with the
+same reason and applies the rest.
+
 Scale: per epoch this is one shuffle on the key (the LWW window), one
 shuffle-join against the target (broadcast when the epoch is small — the
 common case: an epoch is MBs against a 100 TB table, so Spark broadcasts
@@ -22,11 +30,13 @@ the stream itself is zero — all keyed state lives in the target table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import functools
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.codec import CDC_ENVELOPE, conform_payload, key_struct, payload_error
+from ..functions.codec import CDC_ENVELOPE, JSON_MAP, conform_payload, key_struct, refuse
 from ..operators.cdc_batch import last_write_wins
 from ..writer import OP_COL
 
@@ -34,6 +44,9 @@ from ..writer import OP_COL
 #: update all materialize `after`; delete removes the key; unspecified is a
 #: silent no-op.
 UPSERT_OPS = ("create", "snapshot", "update")
+
+#: Operations the envelope may legally carry (``opencdc.proto:38-49``).
+KNOWN_OPS = ("unspecified", "create", "update", "delete", "snapshot")
 
 
 def read_cdc_stream(
@@ -48,31 +61,91 @@ def read_cdc_stream(
     return reader.json(path)
 
 
+def record_error(op: Column, row: Column) -> Column:
+    """The record checks every envelope path shares: the reason a record
+    with operation ``op`` and after-image ``row`` (the raw JSON or its
+    conformed struct: either is null exactly when the record has none) is
+    refused, or null. An operation outside ``opencdc.proto:38-49`` is
+    refused (reference dispatch ``:94-108``), and so is an upsert with no
+    after-image (``records.py``: ``record has no payload``)."""
+    return F.when(
+        ~op.isin(*KNOWN_OPS) | op.isNull(), F.format_string("unknown operation: %s", op)
+    ).when(op.isin(*UPSERT_OPS) & row.isNull(), F.lit("record has no payload"))
+
+
 def decode_cdc(
     envelope: DataFrame, table_schema: T.StructType, key_fields: list[str]
 ) -> DataFrame:
     """Envelope → typed change rows: ``(position, seq, op, key struct,
-    row struct)``. Pure column expressions (whole-stage codegen; no Python
-    in the hot path).
+    row struct, error)``. Pure column expressions (whole-stage codegen; no
+    Python in the hot path).
+
+    ``error`` is the record's verdict: the reason it is refused, or null
+    if it is accepted — :func:`record_error`, then the payload rule
+    (:func:`conform_payload`, upserts only: a delete's after-image is not
+    read), then the key checks (:func:`_verdict`). :func:`apply_cdc_batch`
+    fails the epoch on a refused record (FAILFAST);
+    :func:`apply_cdc_batch_dlq` quarantines it with the same reason. The
+    key is parsed once and the after-image twice, each parse bound once;
+    the checks read those parses.
 
     ``seq`` orders records within a key for the LWW collapse. The envelope
     position is opaque bytes (``opencdc.proto:54``) with no order contract,
     so we use the record's arrival order within the batch — monotonic ids
     assigned at decode."""
-    changes = envelope.select(
+    op = F.col("operation")
+    bound = envelope.select(
         "position",
-        F.monotonically_increasing_id().alias("seq"),
-        F.col("operation").alias("op"),
-        key_struct("key", key_fields).alias("k"),
-        F.col("after").alias("row"),
+        op.alias("op"),
+        "key",
+        F.from_json("key", JSON_MAP).alias("kmap"),
+        F.when(op.isin(*UPSERT_OPS), F.col("after")).alias("row"),
     )
-    return conform_payload(changes, "row", table_schema)
+    conformed = conform_payload(bound, "row", table_schema, error_col="error")
+    verdict = _verdict(table_schema, tuple(key_fields))
+    # seq is assigned here, last: Spark pushes no filter below a projection
+    # with a nondeterministic column, so a filter on the verdict (FAILFAST's
+    # or the dead-letter split's) reads it once instead of inlining the
+    # parses it was computed from
+    return conformed.select(
+        "position", F.monotonically_increasing_id().alias("seq"), "op",
+        key_struct(F.col("kmap"), key_fields).alias("k"), "row", verdict,
+    )
+
+
+@functools.lru_cache(maxsize=64)
+def _verdict(table_schema: T.StructType, key_fields: tuple[str, ...]) -> Column:
+    """The ``error`` column of :func:`decode_cdc`, over the columns its
+    decode binds: :func:`record_error`, the payload rule's reason, then the
+    key checks. Built once per schema and key, as every Column call is a
+    JVM round trip."""
+    op, key, kmap, row = F.col("op"), F.col("key"), F.col("kmap"), F.col("row")
+    # a delete's key must be a JSON object (``:175-188``); every key field
+    # must be in the envelope key or the after-image, the guard against
+    # keyless writes and full-table deletes (``:119-122``); a key field
+    # taken from the envelope must cast to its column
+    not_json = (op == "delete") & key.isNotNull() & kmap.isNull()
+    checks = [F.when(not_json, F.lit("input data is not JSON"))]
+    for k in key_fields:
+        dtype, from_env = table_schema[k].dataType, F.when(row[k].isNull(), kmap[k])
+        checks.append(
+            F.when(row[k].isNull() & from_env.isNull(), F.lit("key has no fields")).when(
+                from_env.isNotNull() & from_env.try_cast(dtype).isNull(),
+                F.lit(f"key field {k!r} does not conform to {dtype.simpleString()}"),
+            )
+        )
+    key_error = F.when(op != "unspecified", F.coalesce(*checks))
+    return F.coalesce(record_error(op, row), F.col("error"), key_error).alias("error")
 
 
 def collapse_lww(decoded: DataFrame, key_fields: list[str]) -> DataFrame:
     """One row per key: the LAST operation wins (SURVEY.md §4's 'CDC batch
     collapse'). For upserts the key may live in the payload rather than the
-    envelope key (inserts don't require one), so coalesce both sides."""
+    envelope key (inserts don't require one), so coalesce both sides.
+
+    A record :func:`decode_cdc` refused fails the job with its reason
+    (FAILFAST): the check rides on the ``op`` column, which the collapse
+    reads for every record before it ranks any."""
     keyed = decoded.select(
         *[
             F.coalesce(F.col(f"k.{k}").cast("string"), F.col(f"row.{k}").cast("string")).alias(
@@ -81,7 +154,7 @@ def collapse_lww(decoded: DataFrame, key_fields: list[str]) -> DataFrame:
             for k in key_fields
         ],
         "seq",
-        "op",
+        refuse(F.col("op"), F.col("error")).alias("op"),
         "row",
     ).filter(F.col("op") != "unspecified")
     keys = [f"__key_{k}" for k in key_fields]
@@ -95,7 +168,9 @@ def apply_cdc_batch(
     key_fields: list[str],
 ) -> None:
     """Apply one collapsed micro-batch with MERGE semantics: upserts
-    replace-or-insert their key; deletes drop it.
+    replace-or-insert their key; deletes drop it. A record
+    :func:`decode_cdc` refused fails the job with its reason before
+    anything commits (FAILFAST, in :func:`collapse_lww`).
 
     The collapsed batch becomes one table-shaped source with an
     :data:`..writer.OP_COL` marker (a delete's key columns come from its
@@ -108,7 +183,7 @@ def apply_cdc_batch(
         *[
             F.coalesce(
                 F.col(f"row.{f.name}"),
-                F.col(f"__key_{f.name}").cast(f.dataType)
+                F.col(f"__key_{f.name}").try_cast(f.dataType)
                 if f.name in key_fields
                 else F.lit(None).cast(f.dataType),
             ).alias(f.name)
@@ -121,92 +196,6 @@ def apply_cdc_batch(
     wh.merge_apply(table, source, key_fields)
 
 
-#: Name of the verdict column added by :func:`classify_cdc_errors`.
-ERROR_COL = "__cdc_error"
-
-#: Operations the envelope may legally carry (``opencdc.proto:38-49``).
-KNOWN_OPS = ("unspecified", "create", "update", "delete", "snapshot")
-
-
-def classify_cdc_errors(
-    envelope: DataFrame, key_fields: list[str], table_schema: T.StructType
-) -> DataFrame:
-    """Envelope rows → envelope + ``__cdc_error`` verdict column (null =
-    valid) — the record-granularity error contract of the reference
-    (``SparkDestinationStream.java:70-92``: each record is try/caught and a
-    failure maps to a per-record gRPC INTERNAL while the rest proceed).
-
-    The FAILFAST epoch path rejects a whole micro-batch on one bad record;
-    this classifier instead lets callers split the batch: valid rows apply,
-    invalid rows quarantine with the reference's error-message taxonomy
-    (:mod:`..records`): ``"input data is not JSON"`` for unparseable
-    key/payload bytes, ``"key has no fields"`` for absent/empty delete keys
-    (the guard that prevents accidental full-table deletes,
-    ``SparkDestinationStream.java:119-122``), ``"record has no payload"``
-    for upserts without an after-image, and the payload rule's own reason
-    (``functions.codec.payload_error``) for an after-image that
-    :func:`decode_cdc` would refuse. Every check is a column expression
-    (whole-stage codegen) — classification adds no Python to the hot path.
-    """
-    kmap = F.from_json("key", T.MapType(T.StringType(), T.StringType()))
-    # json_key_to_map drops null-valued fields before the empty-key guard
-    # (reference :164-165), so an all-null key is also "no fields"
-    kmap_nn = F.map_filter(kmap, lambda _, v: v.isNotNull())
-    amap = F.from_json("after", T.MapType(T.StringType(), T.StringType()))
-    is_upsert = F.col("operation").isin(*UPSERT_OPS)
-    err = (
-        F.when(
-            ~F.col("operation").isin(*KNOWN_OPS),
-            F.concat(F.lit("unknown operation: "), F.col("operation")),
-        )
-        .when(
-            F.col("operation") == "delete",
-            F.when(F.col("key").isNull(), F.lit("key has no fields"))
-            .when(kmap.isNull(), F.lit("input data is not JSON"))
-            .when(F.size(F.map_keys(kmap_nn)) == 0, F.lit("key has no fields")),
-        )
-        .when(
-            is_upsert,
-            F.when(F.col("after").isNull(), F.lit("record has no payload"))
-            .when(amap.isNull(), F.lit("input data is not JSON"))
-            .when(
-                # upserts must still carry every key field somewhere —
-                # envelope key or payload — or the row can never merge
-                F.array_contains(
-                    F.array(
-                        *[
-                            F.coalesce(kmap_nn[k], amap[k]).isNull()
-                            for k in key_fields
-                        ]
-                    ),
-                    F.lit(True),
-                ),
-                F.lit("key has no fields"),
-            )
-            .otherwise(payload_error("after", table_schema)),
-        )
-    )
-    return envelope.withColumn(ERROR_COL, err)
-
-
-def split_cdc_batch(
-    envelope: DataFrame, key_fields: list[str], table_schema: T.StructType
-) -> tuple[DataFrame, DataFrame]:
-    """Classify and split one envelope batch → ``(valid, dead_letter)``.
-
-    ``valid`` keeps the envelope shape (feed it to :func:`decode_cdc` →
-    :func:`apply_cdc_batch` unchanged); ``dead_letter`` is the quarantine
-    record ``(position, operation, error)`` — the durable analogue of the
-    reference's per-record error response.
-    """
-    classified = classify_cdc_errors(envelope, key_fields, table_schema)
-    valid = classified.filter(F.col(ERROR_COL).isNull()).drop(ERROR_COL)
-    dlq = classified.filter(F.col(ERROR_COL).isNotNull()).select(
-        "position", "operation", F.col(ERROR_COL).alias("error")
-    )
-    return valid, dlq
-
-
 def apply_cdc_batch_dlq(
     wh,
     table: str,
@@ -215,23 +204,26 @@ def apply_cdc_batch_dlq(
     dlq_table: str | None = None,
     mark: str | None = None,
 ) -> int:
-    """Per-record-tolerant apply: quarantine malformed records, commit the
+    """Per-record-tolerant apply: quarantine refused records, commit the
     rest. Returns the number of quarantined records.
 
-    One malformed record in an N-record batch dead-letters alone while the
-    other N−1 apply — the reference's record-granularity contract
+    The envelope is decoded once (:func:`decode_cdc`) and split on its
+    verdict: accepted records go to :func:`apply_cdc_batch`, and each
+    refused one dead-letters alone as ``(position, operation, error)``
+    while the other N−1 apply — the reference's record-granularity contract
     (``SparkDestinationStream.java:70-92``) at micro-batch cost. When
-    ``dlq_table`` is given, quarantined rows append durably there
-    (``position``, ``operation``, ``error``, ``quarantined_at``).
+    ``dlq_table`` is given, quarantined rows append durably there with a
+    ``quarantined_at`` stamp.
 
     The table apply is MERGE-idempotent under replay (same collapsed keys,
     same values); the DLQ append is NOT (each replay would stamp and
     append the same quarantined rows again), so the stream path passes a
     per-epoch commit ``mark`` to make it exactly-once."""
-    schema = wh.schema(table)
-    valid, dlq = split_cdc_batch(envelope_batch, key_fields, schema)
-    decoded = decode_cdc(valid, schema, key_fields)
-    apply_cdc_batch(wh, table, decoded, key_fields)
+    decoded = decode_cdc(envelope_batch, wh.schema(table), key_fields)
+    apply_cdc_batch(wh, table, decoded.filter(F.col("error").isNull()), key_fields)
+    dlq = decoded.filter(F.col("error").isNotNull()).select(
+        "position", F.col("op").alias("operation"), "error"
+    )
     n_bad = dlq.count()
     if dlq_table is not None and n_bad:
         stamped = dlq.withColumn("quarantined_at", F.current_timestamp())

@@ -27,8 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.codec import conform_payload
-from .cdc import UPSERT_OPS
+from ..functions.codec import conform_payload, refuse
+from .cdc import UPSERT_OPS, record_error
 
 SIGN_COL = "__sign"
 
@@ -37,10 +37,17 @@ def cdc_delta_frame(envelope: DataFrame, table_schema: T.StructType) -> DataFram
     """CDC envelope batch → signed delta rows ``(__sign, <table columns>)``.
 
     create/snapshot contribute ``+1 after``; update contributes ``+1 after``
-    AND ``−1 before``; delete contributes ``−1 before``. All column
-    expressions (codegen) — no Python in the path.
+    AND ``−1 before``; delete contributes ``−1 before``. A record the
+    shared checks refuse (:func:`.cdc.record_error`: an unknown operation,
+    an upsert with no after-image) fails the job with that reason, as on
+    the FAILFAST apply path. All column expressions (codegen) — no Python
+    in the path.
     """
-    arrivals = envelope.filter(F.col("operation").isin(*UPSERT_OPS)).select(
+    op = F.col("operation")
+    # the refusal rides on the operation the arrivals filter reads, so it
+    # sees every record
+    checked = envelope.withColumn("operation", refuse(op, record_error(op, F.col("after"))))
+    arrivals = checked.filter(F.col("operation").isin(*UPSERT_OPS)).select(
         F.lit(1).alias(SIGN_COL), F.col("after").alias("__row")
     )
     departures = envelope.filter(

@@ -1007,8 +1007,9 @@ class CdcWriter:
         """Apply a micro-batch last-write-wins per key with one merge.
 
         The records become the epoch path's decoded change frame
-        ``(position, seq, op, k, row)`` — ``seq`` is the list order, ``row``
-        the conformed payload (:meth:`_row`) — and go through
+        ``(position, seq, op, k, row, error)`` — ``seq`` is the list order,
+        ``row`` the conformed payload (:meth:`_row`), ``error`` null, as the
+        record decode above raises on what it refuses — and go through
         ``streaming.cdc.apply_cdc_batch``: one collapse, one
         ``merge_apply``, one commit. A payload that does not conform fails
         the batch before anything commits.
@@ -1032,6 +1033,7 @@ class CdcWriter:
                 else normalize_payload_json(r.payload_after)
                 for r in live
             ],
+            "error": pa.nulls(len(live), pa.string()),
         })
         decoded = self._row(frame)
         cdc.apply_cdc_batch(self.wh, self.table, decoded, key_fields)

@@ -554,8 +554,10 @@ def test_server_group_failfast_acks_prefix_and_drops_rest(service):
 
 def test_server_refuses_legacy_record_shape(service):
     """A record frame in the pre-proto-JSON shorthand (UTF-8 position,
-    lowercase op, raw arm) gets one error, commits nothing and closes the
-    stream; a Stop whose lastPosition is not base64 is refused too."""
+    lowercase op, raw arm) gets one record error (``couldn't write
+    record:``, not the client-stream failure's ``Error:``), commits
+    nothing and closes the stream; a Stop whose lastPosition is not base64
+    is refused too."""
     svc, wh = service
     server, c = _open_run(svc)
     try:
@@ -564,6 +566,7 @@ def test_server_refuses_legacy_record_shape(service):
                            "payload": {"after": {"raw": _row("a", 1)}}}})
         err = c.recv()["error"]
         assert err["code"] == "INTERNAL"
+        assert err["description"] == "couldn't write record: unknown operation: create"
         assert svc.run_stream.closed
         bad_stop = c.call({"rpc": "stop", "request": {"lastPosition": "l-1"}})
         assert bad_stop["error"]["description"].startswith("couldn't stop: ")

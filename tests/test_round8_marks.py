@@ -177,3 +177,27 @@ def test_rollback_to_pre_marks_snapshot_clears_all_marks(spark, tmp_path):
     wh.rollback("t", target)
     assert not wh.mark_applied("t", "e0")
     assert not wh.mark_applied("t", "e1")
+
+
+def test_cms_epoch_replay_after_crash_before_watermark(spark, tmp_path):
+    """A crash after the CMS register commit and before the watermark
+    commit: the replayed epoch finds the watermark one epoch behind, and
+    the register write skips on its epoch mark instead of adding the epoch
+    twice. Covers both register writes (the first epoch's append and a
+    later epoch's overwrite)."""
+    from conduit_connector_s3_iceberg_spark.operators.sketches import apply_cms_epoch
+
+    wh = _wh(spark, tmp_path)
+    batch = spark.createDataFrame([(u,) for u in (1, 2, 2, 3)], "user_id bigint")
+
+    def total():
+        return sum(r["cnt"] for r in wh.read("cms").collect())
+
+    for epoch in (0, 1):
+        apply_cms_epoch(wh, "cms", "user_id", batch, epoch)
+        applied = total()
+        # the epoch's watermark commit never landed
+        wh.rollback("cms__applied_epoch", wh.history("cms__applied_epoch")[-2])
+        apply_cms_epoch(wh, "cms", "user_id", batch, epoch)
+        assert total() == applied
+    assert wh.read("cms__applied_epoch").collect()[0]["epoch_id"] == 1

@@ -681,6 +681,27 @@ def test_ivm_rejects_update_without_before_image(spark, tmp_path):
         q.awaitTermination(120)
 
 
+@pytest.mark.parametrize(
+    "record, reason",
+    [
+        (env("p1", "bogus", after={"id": 1, "name": "a", "qty": 2}), "unknown operation: bogus"),
+        (env("p1", "create"), "record has no payload"),
+    ],
+    ids=["unknown_op", "create_without_payload"],
+)
+def test_ivm_delta_refuses_what_the_apply_refuses(spark, record, reason):
+    # the epoch apply's record checks (streaming.cdc.record_error): an
+    # unknown operation is not dropped, a payload-less create is not a +1
+    # row of NULLs
+    from conduit_connector_s3_iceberg_spark.streaming import cdc_delta_frame
+
+    envelope = spark.createDataFrame([record], "position string, operation string, "
+                                     "key string, before string, after string, "
+                                     "metadata map<string,string>")
+    with pytest.raises(Exception, match=reason):
+        cdc_delta_frame(envelope, TABLE_SCHEMA).collect()
+
+
 # ------------------------------------------------- per-source quota (stateful)
 
 
