@@ -20,8 +20,9 @@ expressions over a DataFrame of raw envelope rows. The rules:
   stored as ``"987.0"``. This is a deliberate divergence: the reference
   rewrites every top-level integral float before its read, so it stores
   ``"987"``; here the rule follows the column's type;
-* keys are JSON objects of scalars; values compare via implicit casts
-  (``:195-206``).
+* keys are JSON objects of scalars (:func:`key_struct`); a key value is
+  cast to its column's type, an integral column reading it by the same
+  integral rule as a payload value (``:195-206``).
 
 Everything stays JVM-side — no Python UDFs.
 """
@@ -84,6 +85,13 @@ def _parses(json_col: Column | str, schema: T.StructType) -> tuple[Column, Colum
     )
 
 
+def _integral(exact: Column, double: Column, bits: int) -> Column:
+    """Whether a value read as ``decimal(38,0)`` (``exact``) and as double
+    is an integer of ``bits`` bits: the exact reading lies in that range and
+    equals the double reading, so a fractional value is refused."""
+    return exact.between(-(2 ** (bits - 1)), 2 ** (bits - 1) - 1) & (exact == double)
+
+
 def _conformed(
     raw: Column, exact: Column, wide: Column, schema: T.StructType
 ) -> tuple[Column, Column]:
@@ -110,10 +118,9 @@ def _conformed(
         value, bits = wide[f.name], _bits(f.dataType)
         if bits:
             e = exact[f.name]
-            ok = e.between(-(2 ** (bits - 1)), 2 ** (bits - 1) - 1) & (e == value)
             errors.append(
                 F.when(
-                    value.isNotNull() & ~F.coalesce(ok, F.lit(False)),
+                    value.isNotNull() & ~F.coalesce(_integral(e, value, bits), F.lit(False)),
                     F.lit(f"field {f.name!r} does not conform to {f.dataType.simpleString()}"),
                 )
             )
@@ -159,10 +166,26 @@ def conform_payload(
     return bound.select(*[row if c == json_col else F.col(c) for c in frame.columns], *error)
 
 
-def key_struct(kmap: Column, key_fields: list[str]) -> Column:
-    """Parsed key map (``from_json`` of the key against :data:`JSON_MAP`)
-    → struct of (string-typed) key fields; values match typed columns
-    through implicit casts — the columnar form of the reference's
-    stringified struct keys (``:195-206``). A null-valued field reads as
-    absent, as ``json_key_to_map`` drops it (``:164-165``)."""
-    return F.struct(*[kmap[k].alias(k) for k in key_fields])
+@functools.lru_cache(maxsize=64)
+def key_struct(kmap: str, key_fields: tuple[str, ...], schema: T.StructType) -> Column:
+    """The parsed key map column ``kmap`` (``from_json`` of the key against
+    :data:`JSON_MAP`) → struct of the key fields typed like their table
+    columns. A key's values are text (the reference's stringified struct
+    keys, ``:195-206``) and are cast to the column type, except that an
+    integral column takes them by the payload rule (:func:`_integral`):
+    ``1``, ``1.0`` and ``1e0`` are the int 1, ``12.5`` and ``abc`` do not
+    conform. A field that does not conform reads as null, as does a
+    null-valued one (``json_key_to_map`` drops it, ``:164-165``). Built
+    once per column, key and schema, as every Column call is a JVM round
+    trip."""
+    fields = []
+    for k in key_fields:
+        text, dtype = F.col(kmap)[k], schema[k].dataType
+        bits = _bits(dtype)
+        if bits:
+            exact = text.try_cast(T.DecimalType(38, 0))
+            ok = _integral(exact, text.try_cast(T.DoubleType()), bits)
+            fields.append(F.when(ok, exact.try_cast(dtype)).alias(k))
+        else:
+            fields.append(text.try_cast(dtype).alias(k))
+    return F.struct(*fields)

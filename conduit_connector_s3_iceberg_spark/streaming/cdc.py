@@ -78,16 +78,17 @@ def decode_cdc(
 ) -> DataFrame:
     """Envelope → typed change rows: ``(position, seq, op, key struct,
     row struct, error)``. Pure column expressions (whole-stage codegen; no
-    Python in the hot path).
+    Python in the hot path). The key struct holds the envelope key's
+    fields typed like their columns (:func:`key_struct`), the row struct
+    the conformed after-image (:func:`conform_payload`).
 
     ``error`` is the record's verdict: the reason it is refused, or null
     if it is accepted — :func:`record_error`, then the payload rule
-    (:func:`conform_payload`, upserts only: a delete's after-image is not
-    read), then the key checks (:func:`_verdict`). :func:`apply_cdc_batch`
-    fails the epoch on a refused record (FAILFAST);
-    :func:`apply_cdc_batch_dlq` quarantines it with the same reason. The
-    key is parsed once and the after-image twice, each parse bound once;
-    the checks read those parses.
+    (upserts only: a delete's after-image is not read), then the key checks
+    (:func:`_verdict`). :func:`apply_cdc_batch` fails the epoch on a refused
+    record (FAILFAST); :func:`apply_cdc_batch_dlq` quarantines it with the
+    same reason. The key is parsed once and the after-image twice, each
+    parse bound once; the checks read those parses.
 
     ``seq`` orders records within a key for the LWW collapse. The envelope
     position is opaque bytes (``opencdc.proto:54``) with no order contract,
@@ -109,7 +110,7 @@ def decode_cdc(
     # parses it was computed from
     return conformed.select(
         "position", F.monotonically_increasing_id().alias("seq"), "op",
-        key_struct(F.col("kmap"), key_fields).alias("k"), "row", verdict,
+        key_struct("kmap", tuple(key_fields), table_schema).alias("k"), "row", verdict,
     )
 
 
@@ -120,17 +121,18 @@ def _verdict(table_schema: T.StructType, key_fields: tuple[str, ...]) -> Column:
     key checks. Built once per schema and key, as every Column call is a
     JVM round trip."""
     op, key, kmap, row = F.col("op"), F.col("key"), F.col("kmap"), F.col("row")
+    typed = key_struct("kmap", key_fields, table_schema)
     # a delete's key must be a JSON object (``:175-188``); every key field
     # must be in the envelope key or the after-image, the guard against
     # keyless writes and full-table deletes (``:119-122``); a key field
-    # taken from the envelope must cast to its column
+    # taken from the envelope must conform to its column (:func:`key_struct`)
     not_json = (op == "delete") & key.isNotNull() & kmap.isNull()
     checks = [F.when(not_json, F.lit("input data is not JSON"))]
     for k in key_fields:
         dtype, from_env = table_schema[k].dataType, F.when(row[k].isNull(), kmap[k])
         checks.append(
             F.when(row[k].isNull() & from_env.isNull(), F.lit("key has no fields")).when(
-                from_env.isNotNull() & from_env.try_cast(dtype).isNull(),
+                from_env.isNotNull() & typed[k].isNull(),
                 F.lit(f"key field {k!r} does not conform to {dtype.simpleString()}"),
             )
         )
@@ -141,18 +143,14 @@ def _verdict(table_schema: T.StructType, key_fields: tuple[str, ...]) -> Column:
 def collapse_lww(decoded: DataFrame, key_fields: list[str]) -> DataFrame:
     """One row per key: the LAST operation wins (SURVEY.md §4's 'CDC batch
     collapse'). For upserts the key may live in the payload rather than the
-    envelope key (inserts don't require one), so coalesce both sides.
+    envelope key (inserts don't require one), so coalesce both sides; both
+    are typed like the key's columns, so ``1`` and ``1.0`` are one key.
 
     A record :func:`decode_cdc` refused fails the job with its reason
     (FAILFAST): the check rides on the ``op`` column, which the collapse
     reads for every record before it ranks any."""
     keyed = decoded.select(
-        *[
-            F.coalesce(F.col(f"k.{k}").cast("string"), F.col(f"row.{k}").cast("string")).alias(
-                f"__key_{k}"
-            )
-            for k in key_fields
-        ],
+        *[F.coalesce(F.col(f"k.{k}"), F.col(f"row.{k}")).alias(f"__key_{k}") for k in key_fields],
         "seq",
         refuse(F.col("op"), F.col("error")).alias("op"),
         "row",
@@ -183,9 +181,7 @@ def apply_cdc_batch(
         *[
             F.coalesce(
                 F.col(f"row.{f.name}"),
-                F.col(f"__key_{f.name}").try_cast(f.dataType)
-                if f.name in key_fields
-                else F.lit(None).cast(f.dataType),
+                F.col(f"__key_{f.name}") if f.name in key_fields else F.lit(None).cast(f.dataType),
             ).alias(f.name)
             for f in schema.fields
         ],

@@ -24,10 +24,11 @@ Re-expresses the reference's data plane (``SparkDestinationStream.java:
   group of one. The reference commits once
   per record (``SparkDestinationStream.java:60-277``); the plugin's Run
   stream commits each socket read's records as one group.
-* **apply_batch** — the scale path the reference lacks: decode a
-  micro-batch into the epoch path's change frame and hand it to
-  ``streaming.cdc.apply_cdc_batch`` — one last-write-wins collapse per key,
-  one merge, one commit instead of one Spark job + one data file per record.
+* **apply_batch** — the scale path the reference lacks: turn a
+  micro-batch into the epoch path's envelope rows and apply them as an
+  epoch (``streaming.cdc.decode_cdc`` + ``apply_cdc_batch``) — one
+  last-write-wins collapse per key, one merge, one commit instead of one
+  Spark job + one data file per record.
 
 Every change frame built from Python values (payload rows, delete keys,
 epoch watermarks) goes through Arrow (:func:`arrow_frame`): a local relation,
@@ -931,17 +932,13 @@ class CdcWriter:
         self._group: WriteGroup | None = None
 
     # -- helpers ------------------------------------------------------------
-    def _row(self, frame: DataFrame) -> DataFrame:
-        """``frame`` with its ``row`` payload JSON conformed to the target
-        table's schema (reference ``:216,221-227``) by the one payload rule,
-        ``functions.codec.conform_payload``."""
-        return conform_payload(frame, "row", self.wh.schema(self.table))
-
     def _payload_df(self, payloads: list[str]) -> DataFrame:
-        """The payloads as table rows (:meth:`_row`). One partition: a run's
-        rows land as one data file."""
+        """The payloads as table rows, conformed to the target table's
+        schema (reference ``:216,221-227``) by the one payload rule,
+        ``functions.codec.conform_payload``. One partition: a run's rows
+        land as one data file."""
         frame = arrow_frame(self.spark, {"row": payloads}).coalesce(1)
-        return self._row(frame).select("row.*")
+        return conform_payload(frame, "row", self.wh.schema(self.table)).select("row.*")
 
     # -- per-record operations (reference dispatch, ``:94-108``) ------------
     def batch(self, on_landed=None) -> WriteGroup:
@@ -1006,13 +1003,14 @@ class CdcWriter:
     def apply_batch(self, records: list[Record], key_fields: list[str]) -> None:
         """Apply a micro-batch last-write-wins per key with one merge.
 
-        The records become the epoch path's decoded change frame
-        ``(position, seq, op, k, row, error)`` — ``seq`` is the list order,
-        ``row`` the conformed payload (:meth:`_row`), ``error`` null, as the
-        record decode above raises on what it refuses — and go through
-        ``streaming.cdc.apply_cdc_batch``: one collapse, one
-        ``merge_apply``, one commit. A payload that does not conform fails
-        the batch before anything commits.
+        The records become envelope rows ``(position, operation, key,
+        after)``, the key and after-image as JSON text, and apply as one
+        epoch of the FAILFAST epoch path: ``streaming.cdc.decode_cdc``
+        gives each record its verdict, and ``apply_cdc_batch`` makes one
+        collapse, one ``merge_apply`` and one commit. A record the verdict
+        refuses (a payload or key value that does not conform, a key field
+        in neither the key nor the after-image) fails the batch with its
+        reason before anything commits.
         """
         from .streaming import cdc
 
@@ -1021,21 +1019,19 @@ class CdcWriter:
             return
         frame = arrow_frame(self.spark, {
             "position": pa.array([r.position for r in live], pa.binary()),
-            "seq": pa.array(range(len(live)), pa.int64()),
-            "op": [r.operation.value for r in live],
-            "k": pa.array([
-                struct_key_to_map(key_to_map(r.key))
-                if r.key or r.operation == Operation.DELETE else {}
+            "operation": [r.operation.value for r in live],
+            "key": pa.array([
+                json.dumps(key_to_map(r.key))
+                if r.key or r.operation == Operation.DELETE else None
                 for r in live
-            ], pa.struct([(k, pa.string()) for k in key_fields])),
-            "row": [
+            ], pa.string()),
+            "after": pa.array([
                 None if r.operation == Operation.DELETE
                 else normalize_payload_json(r.payload_after)
                 for r in live
-            ],
-            "error": pa.nulls(len(live), pa.string()),
+            ], pa.string()),
         })
-        decoded = self._row(frame)
+        decoded = cdc.decode_cdc(frame, self.wh.schema(self.table), key_fields)
         cdc.apply_cdc_batch(self.wh, self.table, decoded, key_fields)
 
 

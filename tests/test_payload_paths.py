@@ -10,8 +10,11 @@ boolean or out-of-range value in an integral column is refused; nested
 values are untouched, and a string column keeps a number token's text as
 written.
 
-Both epoch modes give one verdict per record: a record FAILFAST refuses
-fails the epoch with the reason the dead-letter path quarantines it with.
+Both epoch modes and ``CdcWriter.apply_batch`` give one verdict per record:
+a record FAILFAST refuses fails the epoch with the reason the dead-letter
+path quarantines it with. A key value is read by the payload's integral
+rule on every path: ``1.0`` is the key 1, ``12.5`` and ``abc`` do not
+conform to a bigint key.
 """
 
 from __future__ import annotations
@@ -62,8 +65,9 @@ REFUSED = {
 }
 
 
-#: envelope records ``(operation, key, after)`` both epoch modes refuse,
-#: with the reason each gives, against a table holding ids 1-4
+#: envelope records ``(operation, key, after)`` both epoch modes and
+#: ``apply_batch`` refuse, with the reason each gives, against a table
+#: holding ids 1-4
 REFUSED_RECORDS = {
     "unknown_op": (("bogus", '{"id": 1}', '{"id": 1, "n": 5}'), "unknown operation: bogus"),
     "update_without_payload": (("update", '{"id": 2}', None), "record has no payload"),
@@ -72,8 +76,16 @@ REFUSED_RECORDS = {
     "delete_fractional_key": (
         ("delete", '{"id": 12.5}', None), "key field 'id' does not conform to bigint"
     ),
+    "delete_text_key": (
+        ("delete", '{"id": "abc"}', None), "key field 'id' does not conform to bigint"
+    ),
+    "update_text_key_without_key_field": (
+        ("update", '{"id": "abc"}', '{"n": 5}'), "key field 'id' does not conform to bigint"
+    ),
 }
 SEED = [(i, i, None, None) for i in (1, 2, 3, 4)]
+#: delete keys every path reads as id 1
+DELETE_KEYS = ['{"id": 1}', '{"id": 1.0}', '{"id": 1e0}', '{"id": "1"}']
 
 
 def _creates(payloads):
@@ -171,8 +183,25 @@ def test_every_write_path_refuses(spark, tmp_path, case):
 
 @pytest.mark.parametrize("case", list(REFUSED_RECORDS))
 def test_epoch_modes_refuse_the_same_records(spark, tmp_path, case):
-    """FAILFAST raises with the reason the dead-letter path quarantines,
-    and neither changes the table."""
+    """FAILFAST (the epoch default and ``apply_batch``) raises with the
+    reason the dead-letter path quarantines, and none changes the table.
+    A ``Record`` cannot carry an unknown operation, so that case leaves
+    ``apply_batch`` out."""
     record, reason = REFUSED_RECORDS[case]
-    outcomes = _outcomes(spark, tmp_path, [record], (_epoch, _dead_letter), SEED)
-    assert outcomes == {"_epoch": f"refused: {reason}", "_dead_letter": f"refused: {reason}"}
+    paths = (_epoch, _dead_letter) if case == "unknown_op" else (_apply_batch, _epoch, _dead_letter)
+    outcomes = _outcomes(spark, tmp_path, [record], paths, SEED)
+    assert outcomes == {path.__name__: f"refused: {reason}" for path in paths}
+
+
+@pytest.mark.parametrize("key", DELETE_KEYS)
+def test_every_write_path_deletes_an_integral_key(spark, tmp_path, key):
+    outcomes = _outcomes(spark, tmp_path, [("delete", key, None)], seed=SEED)
+    assert outcomes == {name: SEED[1:] for name in outcomes}, json.dumps(outcomes)
+
+
+def test_integral_key_spellings_collapse_as_one_key(spark, tmp_path):
+    """``1.0`` and ``1`` are one key in a batch's last-write-wins collapse:
+    the later delete wins over the earlier update."""
+    records = [("update", '{"id": 1.0}', '{"id": 1, "n": 9}'), ("delete", '{"id": 1}', None)]
+    outcomes = _outcomes(spark, tmp_path, records, seed=SEED)
+    assert outcomes == {name: SEED[1:] for name in outcomes}, json.dumps(outcomes)
